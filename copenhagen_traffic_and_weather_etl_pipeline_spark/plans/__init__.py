@@ -1,58 +1,20 @@
-"""Pipeline composition + run instrumentation (SURVEY.md §2.7 O2/O3/O5).
+"""Plan-shaping helpers and run instrumentation (SURVEY.md §2.7 O5).
 
-The reference composes fetch -> handle -> export per endpoint inside
-try/except so one bad geo-point never kills the run
-(deployment_function.py:200-220, :296-307), and wall-clock-times the run
-(:292-316). Here a pipeline is a list of DataFrame->DataFrame stages
-composed lazily (Catalyst sees the whole plan and optimizes across stage
-boundaries), and fault isolation is per-ROW (error channel columns)
-rather than per-endpoint-loop-iteration.
+The reference wall-clock-times its run (deployment_function.py:292-316).
+Here instrumentation rides the Spark job itself: ``with_run_metrics``
+attaches ``df.observe`` accumulators to an action that already runs.
+The other helpers shape physical plans at call sites in the workload
+registry: ``fan_out_small_scan`` widens an under-partitioned scan
+before CPU-heavy narrow work, and ``materialize_once`` cuts the lineage
+of a multiply-referenced intermediate. Pipeline composition (O3) is the
+streaming tick itself, ``streaming.ingest_and_refresh``.
 """
 
 from __future__ import annotations
 
 import os
-import time
-from collections.abc import Callable
-from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-
-Stage = Callable[[DataFrame], DataFrame]
-
-
-@dataclass
-class Pipeline:
-    """O3: source -> transform* -> sink composition.
-
-    Stages are lazy DataFrame transforms; ``run`` applies them and hands
-    the final frame to ``sink``. Because composition stays declarative,
-    Catalyst fuses the stages (projection/filter pushdown crosses stage
-    boundaries) — unlike the reference's materialize-per-step pandas flow.
-    """
-
-    stages: list[Stage] = field(default_factory=list)
-
-    def then(self, stage: Stage) -> "Pipeline":
-        self.stages.append(stage)
-        return self
-
-    def apply(self, df: DataFrame) -> DataFrame:
-        for stage in self.stages:
-            df = stage(df)
-        return df
-
-    def run(self, df: DataFrame, sink: Callable[[DataFrame], None]) -> "RunStats":
-        """O5: instrument the run like deployment_function.py:292-316."""
-        start = time.time()
-        out = self.apply(df)
-        sink(out)
-        return RunStats(wall_seconds=time.time() - start)
-
-
-@dataclass
-class RunStats:
-    wall_seconds: float
 
 
 def with_run_metrics(df: DataFrame, **metrics) -> tuple[DataFrame, "Observation"]:

@@ -24,10 +24,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
-from pyspark.sql.streaming.stateful_processor import (
-    StatefulProcessor,
-    StatefulProcessorHandle,
-)
 
 EVENT_STREAM_SCHEMA = T.StructType(
     [
@@ -116,58 +112,10 @@ def stateful_user_totals(stream_df: DataFrame) -> DataFrame:
     )
 
 
-class _UserTotalsProcessor(StatefulProcessor):
-    """transformWithState processor: running per-user totals in a named
-    ValueState cell. Same semantics as ``stateful_user_totals`` above,
-    on the newer API."""
-
-    def init(self, handle: StatefulProcessorHandle) -> None:
-        self._totals = handle.getValueState("totals", _TOTALS_STATE_SCHEMA)
-
-    def handleInputRows(self, key, rows, timerValues):  # noqa: ANN001
-        if self._totals.exists():
-            n, tot = self._totals.get()
-        else:
-            n, tot = 0, 0.0
-        for pdf in rows:
-            n += len(pdf)
-            tot += float(pdf["value"].fillna(0.0).sum())
-        self._totals.update((n, tot))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(tot, 6)]}
-        )
-
-    def close(self) -> None:
-        pass
-
-
-def transform_with_state_totals(stream_df: DataFrame) -> DataFrame:
-    """Spark 4's ``transformWithStateInPandas``: the successor API to
-    ``applyInPandasWithState`` — explicit named state cells (value/list/
-    map), timers, and TTL, all backed by the RocksDB state store. The
-    session must run with
-    ``spark.sql.streaming.stateStore.providerClass =
-    ...RocksDBStateStoreProvider`` (required by transformWithState); at
-    100 TB that is the provider you want anyway — state spills off-heap
-    to local SST files instead of living on the JVM heap.
-
-    Runtime note: the transformWithState Python driver worker needs the
-    ``protobuf`` package (plan transport). Where it isn't installed the
-    pytest skips with that reason and ``stateful_user_totals`` is the
-    exercised custom-state path."""
-    return stream_df.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_UserTotalsProcessor(),
-        outputStructType=_TOTALS_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 __all__ = [
     "EVENT_STREAM_SCHEMA",
     "read_event_stream",
     "session_window_stats",
     "stateful_user_totals",
     "streaming_dedup",
-    "transform_with_state_totals",
 ]

@@ -128,171 +128,4 @@ from . import layout_queries  # noqa: E402,F401
 from . import streaming_replay_queries  # noqa: E402,F401
 from . import decorrelation_queries  # noqa: E402,F401
 
-# ---------------------------------------------------------------------------
-# Driver-window rotation. The correctness driver checks the FIRST 50
-# registry entries in insertion order per round, so each round the 50
-# slots go first to queries without a green CORRECTNESS row, then to
-# queries whose DEFINITION changed after their newest green row, then to
-# the ones whose standing evidence is oldest. Rounds 2-5 proved the full
-# 171-entry union; round 6's driver gate was void-environmental (wiped
-# /root/testdata); round 7 re-proved 50 (all green) including every
-# entry whose definition had drifted since round 5.
-# Round 16's window, by the same policy (newest-green histogram after
-# r15's 50/50 gate: 29 entries at r12, 46 at r13, 50 at r14, 50 at
-# r15 — tools/window_freshness.json is the machine-checked ledger):
-#   changed-definition slots (round 16 is the OPTIMIZATION round; each
-#   restructured query re-proves first): triangle_count_coorder,
-#   triangle_count_doulion (shared close-phase rewrite),
-#   equidepth_histogram, bpe_pair_merges, heavy_hitters_tokens,
-#   kmv_set_intersection (already windowed), countmin_token_counts,
-#   mutual_information_event_value, ngram_lm_perplexity,
-#   pagerank_event_transitions, pmi_token_pairs — taking the tail
-#   slots previously held by the three deterministic-hash
-#   partitioners and the lowest-urgency r13 float re-proofs
-#   (winsorize_values, zscore_by_user, corr_value_props,
-#   revenue_mom_growth, stats_moments_orders, trend_regression_events,
-#   window_moving_avg), which move to _NEXT_WINDOW with definitions
-#   unchanged.
-#   1-29. the entire 29-entry r12-era staleness tail, verbatim the
-#      round-15 _NEXT_WINDOW order — after this round's gate no
-#      pre-r13 evidence remains in the registry.
-#   30-50. r13-era re-proofs filling the slack slots,
-#      highest-float-surface first (float and randomized outputs are
-#      where hash-compare drift risk lives): the four ANN paths and
-#      their recall eval, BM25 scores, correlation/regression/moment
-#      statistics, centroid-outlier distances, k-means, KMV
-#      intersection estimates, hourly interpolation, MoM growth
-#      ratios, entropy, moving averages, winsorized values, z-scores,
-#      then the three deterministic-hash partitioners (sampling,
-#      sharding, splits) whose output hangs on exact hash arithmetic.
-# Freshness is enforced in CI: tests/test_window_freshness.py
-# recomputes each entry's definition hash (v2: entry fn + reachable
-# module-level helpers, per the ledger's recorded __meta__ mode)
-# against tools/window_freshness.json and fails if a changed or
-# never-proven entry is missing from this window.
-# ---------------------------------------------------------------------------
-
-# Round 17 swaps: (1) dedup_ngram_jaccard's definition drifted (the
-# md5 shingle keying was dropped from engine AND oracle — optimization
-# round 2, r16-verdict item #4), so it takes a window slot;
-# global_max_agg (trivial, definition-unchanged, re-proven green at
-# r16) moves to _NEXT_WINDOW. (2) record_linkage_score's ENGINE was
-# restructured (pair enumeration -> O(n log n) window-sum counting;
-# oracle unchanged, results identical), so it takes a slot for
-# re-proof; distinct_flags (trivial, definition-unchanged, re-proven
-# green at r16) moves to _NEXT_WINDOW. Every other r17-restructured
-# entry (fk_containment_profile, ngram_lm_perplexity,
-# equidepth_histogram, triangle_count_coorder/doulion,
-# heavy_hitters_tokens, dedup_prefix_filter_jaccard) already holds a
-# slot from r16.
-_DRIVER_WINDOW = [
-    "anti_join_customers",
-    "array_first_last",
-    "attribution_first_touch",
-    "coord_concat",
-    "decontaminate_ngram_overlap",
-    "dedup_canonical_pick",
-    "dedup_incremental",
-    "dedup_incremental_replay",
-    "dedup_resolve_clusters",
-    "record_linkage_score",
-    "dedup_ngram_jaccard",
-    "json_extract",
-    "json_typed_agg",
-    "local_supply_revenue",
-    "pack_sequences",
-    "pivot_event_counts",
-    "quality_filter_cascade",
-    "rollup_lineitem",
-    "sample_token_budget",
-    "semi_join_customers",
-    "set_except_status",
-    "set_intersect_status",
-    "ship_delay_by_priority",
-    "text_pii_scrub",
-    "text_strip_hotwords",
-    "top_orders",
-    "unpivot_lineitem_metrics",
-    "window_lead_lag",
-    "window_rank_suite",
-    "ann_recall_eval",
-    "bm25_retrieval",
-    "embedding_centroid_outliers",
-    "interpolate_hourly_values",
-    "ivf_ann_search",
-    "kmv_set_intersection",
-    "pq_ann_adc",
-    "sim_topk_bruteforce",
-    "dedup_prefix_filter_jaccard",
-    "dedup_method_eval",
-    "fk_containment_profile",
-    "countmin_token_counts",
-    "mutual_information_event_value",
-    "ngram_lm_perplexity",
-    "pagerank_event_transitions",
-    "pmi_token_pairs",
-    "heavy_hitters_tokens",
-    "triangle_count_coorder",
-    "triangle_count_doulion",
-    "equidepth_histogram",
-    "bpe_pair_merges",
-]
-
-# Positions 51+: definition-unchanged entries in staleness order — the
-# 25 remaining r13-era entries (alphabetical within the round cohort)
-# — so a future rotation is again a window swap.
-_NEXT_WINDOW: list[str] = [
-    "global_max_agg",
-    "distinct_flags",
-    "array_agg_orderkeys",
-    "chain_components_recursive",
-    "corr_value_props",
-    "dq_expectations",
-    "exists_over_balance",
-    "funnel_view_click_purchase",
-    "gaps_islands_activity",
-    "hash_sample_orders",
-    "hashed_feature_buckets",
-    "kmeans_clusters",
-    "map_agg_event_counts",
-    "mode_return_priority",
-    "multi_distinct_aggs",
-    "null_safe_join_brands",
-    "pricing_summary",
-    "revenue_mom_growth",
-    "rolling_7d_active_users",
-    "scd2_intervals",
-    "set_except_all_keys",
-    "set_intersect_all_keys",
-    "shuffle_shards_deterministic",
-    "sim_topk_vectorized",
-    "skyline_orders",
-    "snapshot_diff_cdf",
-    "split_train_val_test",
-    "stats_moments_orders",
-    "text_entropy",
-    "text_token_encode",
-    "topn_orders_per_customer",
-    "trend_regression_events",
-    "web_blocklist_filter",
-    "web_domain_caps",
-    "web_url_canonicalize",
-    "window_first_last",
-    "window_moving_avg",
-    "winsorize_values",
-    "zscore_by_user",
-]
-
-
-def _rotate_registry() -> None:
-    ordered = {name: REGISTRY[name] for name in _DRIVER_WINDOW + _NEXT_WINDOW}
-    for name, spec in REGISTRY.items():
-        if name not in ordered:
-            ordered[name] = spec
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
-
-
-_rotate_registry()
-
 __all__ = ["REGISTRY", "QuerySpec", "register", "load", "register_views", "TABLES"]

@@ -7,10 +7,10 @@ SQL is byte-identical to what the per-query generators produced before
 the extraction (verified by string equality over all 175 registered
 oracles at the refactor commit).
 
-Freshness note: oracle strings are materialized at registration and
-hashed by tools/freshness.py, so edits here flip the definition hash of
-every entry whose oracle embeds the generated text — the CI window
-check fires exactly as if the SQL were edited in place.
+Oracle strings are materialized at registration, so an edit here changes
+the oracle of every entry that embeds the generated text, exactly as if
+the SQL were edited in place: re-run ``tools/check_correctness.py`` over
+those entries.
 """
 
 from __future__ import annotations

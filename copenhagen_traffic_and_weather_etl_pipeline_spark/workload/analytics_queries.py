@@ -931,9 +931,9 @@ def _triangle_close_count(e: DataFrame, deg: DataFrame) -> DataFrame:
 # uniform hashing).
 #
 # This entry previously implemented DOULION (per-EDGE sampling,
-# Tsourakakis et al. KDD 2009) and keeps its registry name for ledger
-# continuity — but edge sampling was measurably SLOWER than the exact
-# count here (BENCH_r04: 4.61 s vs 3.40 s at sf0.1), because an edge
+# Tsourakakis et al. KDD 2009) and keeps its registry name — but edge
+# sampling was measurably SLOWER than the exact count here (4.61 s vs
+# 3.40 s at sf0.1, commit e54faa2), because an edge
 # filter references BOTH endpoints and therefore cannot be pushed below
 # pair GENERATION, which is the dominant cost (profiled round 5: edge
 # generation alone is ~60% of the exact query; a monochromatic-edge

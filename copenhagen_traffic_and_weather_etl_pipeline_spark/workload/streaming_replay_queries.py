@@ -181,11 +181,11 @@ def _drain(stream_df: DataFrame, out_dir: str, ckpt_dir: str):
     state is testdata-sized, so a session at Spark's default 200
     multiplies pure task-launch overhead: measured at sf0.01, 200
     partitions took 24 s (sessions) / 43 s (join) vs 13 s each at 32,
-    and 8 shaves the floor further (round-8 measurements in
-    ROUND8_NOTES.md) while still exercising multi-partition state
-    merge. Pin the replay to min(session, 8) for its own run and
-    restore the session conf after — a production streaming job sizes
-    state partitions to its cluster; this pins only the replay harness.
+    and 8 shaves the floor further (measured in commit 01c3c9f) while
+    still exercising multi-partition state merge. Pin the replay to
+    min(session, 8) for its own run and restore the session conf after —
+    a production streaming job sizes state partitions to its cluster;
+    this pins only the replay harness.
     """
     spark = stream_df.sparkSession
     key = "spark.sql.shuffle.partitions"

@@ -476,9 +476,7 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
 # checkpoint entirely (1.15-1.30x): the split-first form pays
 # fan_out_small_scan's text repartition per branch, and the
 # pre-exploded checkpoint feeds the probe/confirm job a ready shingle
-# stream. The r16 shape stands. (Note kept OUTSIDE the function body so
-# the freshness ledger's definition hash — inspect.getsource(fn) —
-# stays stable across a comment-only observation.)
+# stream. The r16 shape stands.
 # ---------------------------------------------------------------------------
 
 _BLOOM_M = 8192  # bit-space size

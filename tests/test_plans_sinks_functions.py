@@ -1,5 +1,5 @@
 """Coverage for the previously-unexercised surfaces: S7 create_table_ddl,
-O3/O5 Pipeline/RunStats, T3 decode_pubsub_payload."""
+O5 with_run_metrics, T3 decode_pubsub_payload."""
 
 from __future__ import annotations
 
@@ -10,7 +10,6 @@ from pyspark.sql import functions as F
 from copenhagen_traffic_and_weather_etl_pipeline_spark.functions import (
     decode_pubsub_payload,
 )
-from copenhagen_traffic_and_weather_etl_pipeline_spark.plans import Pipeline, RunStats
 from copenhagen_traffic_and_weather_etl_pipeline_spark.schemas import TRAFFIC_SCHEMA
 from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
     append_table,
@@ -34,29 +33,6 @@ def test_create_table_ddl_and_read_back(spark, tmp_path):
         assert got.count() == 0
     finally:
         spark.sql("DROP TABLE IF EXISTS traffic_ddl_test")
-
-
-def test_pipeline_composition_and_runstats(spark, tmp_path):
-    """O3/O5: stages compose lazily; run() applies sink and times it."""
-    df = spark.range(100).withColumn("v", F.col("id") * 2)
-    pipe = (
-        Pipeline()
-        .then(lambda d: d.filter(F.col("id") % 2 == 0))
-        .then(lambda d: d.select("id", (F.col("v") + 1).alias("v1")))
-    )
-    out = pipe.apply(df)
-    assert out.columns == ["id", "v1"]
-    assert out.count() == 50
-
-    sunk = {}
-
-    def sink(d):
-        sunk["rows"] = d.count()
-
-    stats = pipe.run(df, sink)
-    assert isinstance(stats, RunStats)
-    assert sunk["rows"] == 50
-    assert stats.wall_seconds >= 0
 
 
 def test_decode_pubsub_payload(spark):

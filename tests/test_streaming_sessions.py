@@ -6,8 +6,6 @@ from __future__ import annotations
 
 import json
 
-import pytest
-
 from copenhagen_traffic_and_weather_etl_pipeline_spark.streaming.sessions import (
     read_event_stream,
     session_window_stats,
@@ -212,75 +210,3 @@ def test_watermark_drops_late_events_across_restart(spark, tmp_path):
     )
     run_available()
     assert read_out() == {"2026-08-12 09:00:00": 1, "2026-08-12 13:00:00": 1}
-
-
-def _has_protobuf() -> bool:
-    try:
-        from google.protobuf import descriptor  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="transformWithState's Python driver worker requires protobuf, "
-    "not installed in this environment (plan serialization transport); "
-    "the operator itself is plain public API",
-)
-def test_transform_with_state_totals_across_batches(spark, tmp_path):
-    """Spark 4 transformWithStateInPandas: same two-micro-batch carry
-    as the applyInPandasWithState test, on the successor API (named
-    ValueState, RocksDB state store)."""
-    from copenhagen_traffic_and_weather_etl_pipeline_spark.streaming.sessions import (
-        transform_with_state_totals,
-    )
-
-    input_dir = tmp_path / "events"
-    input_dir.mkdir()
-    ckpt = tmp_path / "ckpt"
-    _write_events(
-        input_dir,
-        "batch1.json",
-        [
-            (1, "2026-08-12T09:00:00.000Z", 1, "click", 1.0),
-            (2, "2026-08-12T09:10:00.000Z", 1, "view", 2.0),
-            (3, "2026-08-12T09:05:00.000Z", 2, "view", 5.0),
-        ],
-    )
-    _write_events(
-        input_dir,
-        "batch2.json",
-        [(4, "2026-08-12T10:00:00.000Z", 1, "click", 4.0)],
-    )
-
-    old_provider = spark.conf.get("spark.sql.streaming.stateStore.providerClass", None)
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_event_stream(spark, str(input_dir), max_files_per_trigger=1)
-        q = (
-            transform_with_state_totals(stream)
-            .writeStream.format("memory")
-            .queryName("tws_totals")
-            .outputMode("update")
-            .option("checkpointLocation", str(ckpt))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        rows = spark.sql(
-            "SELECT user_id, max(n_events) AS n, max(total_value) AS tot "
-            "FROM tws_totals GROUP BY user_id ORDER BY user_id"
-        ).collect()
-        assert [(r.user_id, r.n, r.tot) for r in rows] == [(1, 3, 7.0), (2, 1, 5.0)]
-    finally:
-        if old_provider is None:
-            spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-        else:
-            spark.conf.set(
-                "spark.sql.streaming.stateStore.providerClass", old_provider
-            )

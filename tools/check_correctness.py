@@ -5,7 +5,6 @@ values.
 
 Usage:
     python tools/check_correctness.py [query ...] [--sf /root/testdata/sf0.01]
-    python tools/check_correctness.py --window      # first 50 = driver window
 """
 
 from __future__ import annotations
@@ -109,12 +108,6 @@ def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*")
     ap.add_argument("--sf", default=None)
-    ap.add_argument(
-        "--window",
-        action="store_true",
-        help="check only the first 50 registry entries (the slice the "
-        "driver's per-round correctness gate sees)",
-    )
     args = ap.parse_args()
     def _is_scale_factor(v: str) -> bool:
         try:
@@ -142,7 +135,7 @@ def main() -> int:
 
     qs = entrymod.queries()
     oracles = entrymod.oracle_sql()
-    names = args.queries or (list(qs)[:50] if args.window else list(qs))
+    names = args.queries or list(qs)
 
     from copenhagen_traffic_and_weather_etl_pipeline_spark.session import get_spark
 

@@ -1,6 +1,6 @@
-"""Regenerate PLANS.md: formatted physical plans for representative
-registry queries, each with a note on why this is the plan we want at
-100 TB. Run after any planner-relevant change:
+"""Print formatted physical plans for representative registry queries,
+each with a note on why this is the plan we want at 100 TB, as markdown.
+Run after any planner-relevant change to review the plans:
 
     python tools/dump_plans.py > PLANS.md
 """
