@@ -1,8 +1,6 @@
 """Relational/text breadth beyond the round-2 surface: gaps-and-islands,
 correlated EXISTS, window-based skyline, information-theoretic text
-quality, map-typed aggregation, and mode. Registered at the back of the
-registry — they enter the driver's 50-slot window at the next rotation
-(see workload/__init__.py).
+quality, map-typed aggregation, and mode.
 
 Every query keeps the scale rules: single keyed shuffle (or none),
 no cartesian products, no row-at-a-time Python.
