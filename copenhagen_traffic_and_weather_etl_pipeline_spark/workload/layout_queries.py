@@ -499,16 +499,17 @@ def kaplan_meier_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
 # Pairs require strict a.k < b.k, so row pairs SHARING a custkey must
 # come back out: the "ka"/"ks" variants apply the same window-count
 # identity one level deeper, partitioned additionally by k, and their
-# sums are subtracted from every cell. On PK-clean data those windows
-# see singleton partitions and contribute 0; they exist so the rewrite
-# is unconditionally equivalent, not "equivalent when custkey is
-# unique".
+# sums are subtracted from every upward-closed sum. On PK-clean data
+# those windows see singleton partitions and contribute 0; they exist
+# so the rewrite is unconditionally equivalent, not "equivalent when
+# custkey is unique".
 # Plan shape: ONE data exchange (repartition by block) serves every
 # window — each clustering below is a superset of (nat, band), and
 # Spark's subset rule (HashPartitioning(e) satisfies
 # ClusteredDistribution(c) when e ⊆ c) makes them all exchange-free
-# local sorts; the only other exchanges are the two 1-row aggregates. The oracle keeps the pair join (DuckDB-cheap at
-# oracle SFs), so equivalence is re-proven by the gate on every run;
+# local sorts; the only other exchanges are the two 1-row aggregates.
+# The oracle keeps the pair join (DuckDB-cheap at oracle SFs), so
+# equivalence is re-proven by the gate on every run;
 # tests/test_properties.py additionally pins the histogram against a
 # pair-enumeration reference on adversarial shapes (duplicate keys,
 # NULL nation/segment/balance, band/distance boundary values).
