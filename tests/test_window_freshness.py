@@ -1,23 +1,11 @@
-"""CI enforcement of the driver-window freshness policy.
+"""Tests of the registry entry definition hasher (tools/freshness.py).
 
-Every registry entry's correctness evidence is a green driver-gate row
-earned on some past round's tree. tools/window_freshness.json records,
-per entry, that round and the entry's definition hash AT that tree
-(fn source + oracle + imported engine-module sources — see
-tools/freshness.py). This test recomputes the hashes against the
-current tree and fails if any entry whose definition drifted since its
-evidence — or that has no evidence at all — is missing from
-``_DRIVER_WINDOW`` (the first 50 registry entries, which the driver
-re-proves next round).
-
-This automates what rounds 4-7 did by hand (ROUND7_NOTES.md §3) and
-closes the two observed blind spots: changes landed in the same round
-as a gate but after it ran, and operator-module changes invisible to a
-fn+oracle-only hash (the round-7 asof case).
-
-After a new CORRECTNESS_r*.json lands, refresh the baseline with
-``python tools/freshness.py --baseline`` (requires the round's tree to
-be committed so the per-round git worktrees resolve).
+An entry's hash covers its fn source, its materialized oracle, the
+source of every first-party engine module it imports (transitively)
+and, with ``--helpers``, every module-level workload helper it reaches
+by name. These tests pin the import resolution, the scope analysis
+that decides which module-level names a fn reads, and end-to-end hash
+flips on synthetic packages.
 """
 
 from __future__ import annotations
@@ -29,250 +17,9 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO / "tools"))
 
-from freshness import compute_hashes, newest_green_rounds  # noqa: E402
-
 from copenhagen_traffic_and_weather_etl_pipeline_spark.workload import (  # noqa: E402
     REGISTRY,
-    _DRIVER_WINDOW,
-    _NEXT_WINDOW,
 )
-
-BASELINE = json.loads((REPO / "tools" / "window_freshness.json").read_text())
-# v1 (False) or v2 helper-closure (True) — current hashes must be
-# computed in the same mode the baseline was built with.
-HELPERS_MODE = BASELINE.get("__meta__", {}).get("helpers", False)
-
-
-def test_window_shape():
-    assert len(_DRIVER_WINDOW) == 50, "driver checks exactly 50 entries"
-    assert len(set(_DRIVER_WINDOW)) == 50, "window has duplicates"
-    unknown = [n for n in _DRIVER_WINDOW + _NEXT_WINDOW if n not in REGISTRY]
-    assert not unknown, f"window names not in REGISTRY: {unknown}"
-    assert list(REGISTRY)[:50] == _DRIVER_WINDOW, (
-        "registry insertion order must put the window first — "
-        "_rotate_registry() not applied?"
-    )
-    assert not set(_DRIVER_WINDOW) & set(_NEXT_WINDOW)
-
-
-def test_changed_or_unproven_entries_are_in_window():
-    current = compute_hashes(REPO, include_helpers=HELPERS_MODE)
-    needs_slot: dict[str, str] = {}
-    for name in REGISTRY:
-        rec = BASELINE.get(name)
-        if rec is None:
-            needs_slot[name] = "no green driver row recorded"
-        elif rec["hash"] is None:
-            needs_slot[name] = f"unresolvable at its green round r{rec['round']}"
-        elif rec["hash"] != current[name]:
-            needs_slot[name] = (
-                f"definition changed since its newest green row "
-                f"(r{rec['round']} @ {rec['rev']})"
-            )
-    missing = {n: why for n, why in needs_slot.items() if n not in set(_DRIVER_WINDOW)}
-    assert not missing, (
-        "entries with invalidated/absent driver evidence must be in "
-        f"_DRIVER_WINDOW for re-proof: {json.dumps(missing, indent=1)}"
-    )
-
-
-def test_baseline_rounds_match_correctness_artifacts():
-    """The checked-in baseline must agree with the CORRECTNESS_r*.json
-    ledger about each entry's newest green round — a stale baseline
-    (e.g. not regenerated after a new round's artifacts landed) would
-    silently weaken the drift check above.
-
-    Round-15 verdict item #1: when the staleness is attributable
-    SOLELY to uncommitted driver artifacts (the DESIGNED round-boundary
-    state — the ledger rebuild needs the round's commit for its
-    worktree, so it CANNOT have run yet), this is process sequencing,
-    not a regression, and the suite must not judge red for it: skip
-    with the full diagnosis (which names the one-command fix,
-    ``python tools/freshness.py --turnover``). Every other stale cause
-    — committed artifacts with a skipped rebuild — stays a hard fail."""
-    import pytest
-
-    from freshness import stale_ledger_diagnosis, uncommitted_driver_artifacts
-
-    newest = newest_green_rounds(REPO)
-    stale = {
-        n: (BASELINE.get(n, {}).get("round"), r)
-        for n, r in newest.items()
-        if n in REGISTRY and BASELINE.get(n, {}).get("round") != r
-    }
-    if stale:
-        msg = stale_ledger_diagnosis(stale, HELPERS_MODE, REPO)
-        if uncommitted_driver_artifacts(REPO):
-            pytest.skip(msg)
-        pytest.fail(msg)
-
-
-def test_stale_ledger_diagnosis_is_self_explaining(tmp_path):
-    """Round-10 verdict item: a red caused by the DESIGNED
-    round-boundary state (newest CORRECTNESS_r*.json not yet committed,
-    so the ledger rebuild cannot have run) must be impossible to
-    mistake for an engine regression — the failure text says so
-    explicitly and names the exact rebuild command. Once the artifacts
-    are committed, the plain stale message names the rebuild command in
-    the ledger's recorded hash mode."""
-    import subprocess
-
-    from freshness import stale_ledger_diagnosis
-
-    def git(*args):
-        subprocess.run(
-            ["git", *args], cwd=tmp_path, check=True, capture_output=True
-        )
-
-    git("init", "-q")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
-    git("add", "-A")
-    git("commit", "-qm", "round 1: verdict/advice/correctness/bench")
-
-    stale = {"q": (1, 2)}
-
-    # Untracked newest artifact → the designed round-boundary state.
-    (tmp_path / "CORRECTNESS_r02.json").write_text("{}")
-    msg = stale_ledger_diagnosis(stale, True, tmp_path)
-    assert "NOT an engine regression" in msg
-    assert "CORRECTNESS_r02.json" in msg
-    # Round-14 verdict item #2: the failure text names the ONE
-    # turnover command (not just the manual rebuild steps).
-    assert "python tools/freshness.py --turnover" in msg
-    assert "--baseline --helpers" in msg
-
-    # Committed artifacts but skipped rebuild → plain stale message,
-    # still pointing at the one command.
-    git("add", "-A")
-    git("commit", "-qm", "round 2: verdict/advice/correctness/bench")
-    msg2 = stale_ledger_diagnosis(stale, True, tmp_path)
-    assert "NOT an engine regression" not in msg2
-    assert "out of date" in msg2
-    assert "python tools/freshness.py --turnover" in msg2
-    assert "--baseline --helpers" in msg2
-
-    # v1 ledger mode → no --helpers in the rebuild command.
-    msg3 = stale_ledger_diagnosis(stale, False, tmp_path)
-    assert "--helpers" not in msg3
-
-
-def test_turnover_plan_decisions():
-    """The --turnover artifact-commit step: round inference from the
-    dirty set, nothing-to-do on a clean tree, and a hard refusal when
-    the round's driver subject already exists (a duplicate would be
-    silently ignored by the oldest-wins evidence-tree resolver)."""
-    import pytest
-
-    from freshness import _turnover_plan
-
-    log = "aaa1111 round 1: verdict/advice/correctness/bench\n"
-
-    # Clean tree → no commit planned.
-    assert _turnover_plan([], log, [1, 2]) == (None, None)
-
-    # Dirty CORRECTNESS names the round directly (newest wins).
-    rnd, subject = _turnover_plan(
-        ["CORRECTNESS_r02.json", "BENCH_r02.json", "VERDICT.md"], log, [1, 2]
-    )
-    assert rnd == 2
-    assert subject == "round 2: verdict/advice/correctness/bench"
-
-    # Dirty non-CORRECTNESS artifacts infer the round from disk.
-    rnd2, subject2 = _turnover_plan(["VERDICT.md", "ADVICE.md"], log, [1, 2])
-    assert (rnd2, subject2) == (2, "round 2: verdict/advice/correctness/bench")
-
-    # Duplicate driver subject → refuse, never a silent second commit.
-    with pytest.raises(SystemExit, match="already exists"):
-        _turnover_plan(["CORRECTNESS_r01.json"], log, [1])
-
-    # No round inferable at all → refuse with instructions.
-    with pytest.raises(SystemExit, match="no CORRECTNESS"):
-        _turnover_plan(["VERDICT.md"], log, [])
-
-
-def test_porcelain_z_parsing_handles_renames_and_special_paths():
-    """Round-15 advice: porcelain output must be parsed NUL-delimited —
-    line slicing mangles rename entries into bogus 'old -> new' paths
-    and chokes on git-quoted special characters (which -z never
-    emits)."""
-    from freshness import _parse_porcelain_z
-
-    out = "\0".join(
-        [
-            "?? CORRECTNESS_r16.json",
-            " M BENCH_r16.json",
-            "R  VERDICT.md",  # rename: next field is the SOURCE path
-            "VERDICT_old.md",
-            "A  name with spaces.md",
-            "",
-        ]
-    )
-    assert _parse_porcelain_z(out) == [
-        "CORRECTNESS_r16.json",
-        "BENCH_r16.json",
-        "VERDICT.md",
-        "name with spaces.md",
-    ]
-
-
-def test_designed_round_boundary_detection(tmp_path):
-    """Round-15 verdict item #1: the CI gate skips (not fails) exactly
-    when uncommitted CORRECTNESS artifacts exist — the state in which
-    the ledger rebuild CANNOT have run. Committed artifacts → empty
-    detection → the stale path stays a hard fail."""
-    import subprocess
-
-    from freshness import uncommitted_driver_artifacts
-
-    def git(*args):
-        subprocess.run(
-            ["git", *args], cwd=tmp_path, check=True, capture_output=True
-        )
-
-    git("init", "-q")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
-    (tmp_path / "BENCH_r01.json").write_text("{}")  # never a trigger
-    assert uncommitted_driver_artifacts(tmp_path) == ["CORRECTNESS_r01.json"]
-    git("add", "-A")
-    # Staged-but-uncommitted still counts: the worktree resolver needs
-    # a COMMIT for the round.
-    assert uncommitted_driver_artifacts(tmp_path) == ["CORRECTNESS_r01.json"]
-    git("commit", "-qm", "round 1: verdict/advice/correctness/bench")
-    assert uncommitted_driver_artifacts(tmp_path) == []
-
-
-def test_turnover_refuses_polluted_index(tmp_path, monkeypatch):
-    """Round-15 advice (medium): a previously-staged unrelated change
-    must never be absorbed into the round's evidence commit — turnover
-    refuses outright when the index is non-empty."""
-    import subprocess
-
-    import freshness
-    import pytest
-
-    def git(*args):
-        subprocess.run(
-            ["git", *args], cwd=tmp_path, check=True, capture_output=True
-        )
-
-    git("init", "-q")
-    git("config", "user.email", "t@t")
-    git("config", "user.name", "t")
-    (tmp_path / "engine.py").write_text("x = 1\n")
-    git("add", "-A")
-    git("commit", "-qm", "base")
-    # Stage an unrelated engine edit, then drop a round artifact.
-    (tmp_path / "engine.py").write_text("x = 2\n")
-    git("add", "engine.py")
-    (tmp_path / "CORRECTNESS_r01.json").write_text("{}")
-    monkeypatch.setattr(freshness, "REPO", tmp_path)
-    with pytest.raises(SystemExit, match="staged changes"):
-        freshness.turnover()
-
 
 def test_import_resolution_covers_all_forms(tmp_path):
     """The dependency extractor must resolve every Python import form —
@@ -892,41 +639,6 @@ def test_helpers_mode_hash_flips_on_helper_edit(tmp_path):
     v1_b, v2_b = dump(False), dump(True)
     assert v1_a == v1_b, "v1 must NOT see the helper-constant edit"
     assert v2_a != v2_b, "v2 must flip on the helper-constant edit"
-
-
-def test_round_revs_derived_from_git_log():
-    """Round→rev resolution is derived from the exact `round N:
-    verdict/advice/correctness/bench` commit subjects (round-8 ADVICE:
-    no manual ROUND_REVS edit per round). Only the exact subject
-    matches — a later 'round N: verdict errata' must NOT re-pin the
-    round — and with duplicates the OLDEST wins (the gate ran against
-    the tree the round's first verdict commit sits on). ROUND_REVS
-    stays the explicit override."""
-    from freshness import _parse_round_revs, round_revs
-
-    log = "\n".join(
-        [
-            # git log is newest-first; the oldest round-9 commit is last.
-            "bbb2222 round 9: verdict/advice/correctness/bench",
-            "ccc3333 round 9: verdict errata — must not match at all",
-            "ddd4444 round 9: end-of-round snapshot (ignored)",
-            "eee5555 Fix something round 2: not-at-start (ignored)",
-            "fff6666 round 8: verdict/advice/correctness/bench",
-            "aaa1111 round 9: verdict/advice/correctness/bench",
-        ]
-    )
-    assert _parse_round_revs(log) == {9: "aaa1111", 8: "fff6666"}
-
-    # Against the real repo log: every historical verdict commit
-    # resolves, and matches the hand-verified pins rounds 1-8 used.
-    # %h abbreviation length is config-dependent (core.abbrev), so
-    # compare by mutual prefix rather than exact 7-char equality.
-    def same(a: str, b: str) -> bool:
-        return a.startswith(b) or b.startswith(a)
-
-    revs = round_revs()
-    assert same(revs[1], "634b8d0") and same(revs[5], "f0491d0")
-    assert same(revs[7], "6609c87") and same(revs[8], "11b1cdb")
 
 
 def test_compute_hashes_refuses_mixed_trees(tmp_path):

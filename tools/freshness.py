@@ -1,9 +1,7 @@
-"""Driver-window freshness: definition hashes for every registry entry.
+"""Definition hashes for every registry entry.
 
-The correctness driver proves 50 registry entries per round; the other
-entries stand on older green rows. That evidence is only valid while
-the entry's DEFINITION is unchanged, so each entry gets a content hash
-over everything that determines its behavior:
+Each entry gets a content hash over everything that determines its
+behavior:
 
   * ``inspect.getsource(fn)`` — the query function itself. Engine
     imports in this repo are function-level (``from ..operators.dedup
@@ -14,37 +12,23 @@ over everything that determines its behavior:
     oracle embeds other entries' SQL built at import time);
   * the full source of every first-party engine module the function
     (or its defining module, at top level) imports — ``operators/*``,
-    ``plans``, ``functions``, ``schemas``, ``streaming/*`` … — closing
-    the round-7 "asof blind spot" where an operator-level semantic fix
-    was invisible to a fn+oracle hash.
+    ``plans``, ``functions``, ``schemas``, ``streaming/*`` … —
+    transitively, so an operator-level semantic fix flips the hash of
+    every entry that reaches it.
 
-v1 limitation and the opt-in v2 mode: in v1 an intra-module helper
-called by the fn but defined outside it is not hashed unless the
-oracle captures it; the local 175-entry oracle gate covers such drift
-behaviorally. ``--helpers`` (v2) closes it by also hashing the source
-segments of every module-level workload definition the fn reaches by
-name (transitively, across workload modules). v2 invalidates more
-standing evidence than one driver window can re-prove (measured round
-9: 83 entries, dominated by the r6/r7 ``load`` loader change), so the
-checked-in baseline stays v1 until the round-10 rotation makes the
-v2-stale cohort fit one window; the baseline records its mode in
-``__meta__`` and CI follows it automatically.
+``--helpers`` also hashes the source segments of every module-level
+workload definition the fn reaches by name (transitively, across
+workload modules), so an edit to an intra-module helper or constant
+flips the hash too.
+
+Two dumps taken before and after a change name the entries whose
+definition it touched; ``tools/check_correctness.py`` takes those
+names as its positional arguments.
 
 Usage:
     python tools/freshness.py --dump [--repo DIR] [--helpers]
         Print one JSON object {entry: hash} for the tree at DIR
         (default: this repo).
-    python tools/freshness.py --turnover
-        One-command round-boundary fix: commit untracked driver
-        artifacts under the exact driver subject, rebuild the ledger
-        in its recorded mode, commit the rebuilt ledger.
-    python tools/freshness.py --baseline [--helpers]
-        Rebuild tools/window_freshness.json: for each entry, its
-        newest green driver round (from CORRECTNESS_r*.json) and its
-        definition hash AT THAT ROUND'S TREE (via a temporary git
-        worktree per round). Entries whose current definition differs
-        from the recorded hash must sit in ``_DRIVER_WINDOW`` — CI
-        enforces this in tests/test_window_freshness.py.
 """
 
 from __future__ import annotations
@@ -53,70 +37,11 @@ import argparse
 import ast
 import hashlib
 import json
-import re
-import subprocess
 import sys
 from pathlib import Path
 
 REPO = Path(__file__).resolve().parent.parent
 PKG = "copenhagen_traffic_and_weather_etl_pipeline_spark"
-
-# Tree each round's driver gate ran against: the round-N verdict commit
-# (artifact-only on top of the builder's final tree, so the package
-# contents are identical to what the gate imported). Derived from the
-# git log automatically — every round boundary lands as a commit whose
-# subject starts "round N: verdict" — so a new round needs no manual
-# edit here. ROUND_REVS holds explicit OVERRIDES only (e.g. if a
-# round's gate ran against a tree other than its verdict commit).
-ROUND_REVS: dict[int, str] = {
-    # round 6 was void (wiped testdata) — no entry's newest green is 6,
-    # so its derived rev is never dereferenced.
-}
-
-# Exact subject, not a prefix: a loose 'round N: verdict' match would
-# let any later commit (e.g. 'round 8: verdict errata') silently
-# re-pin a historical round's evidence tree (round-9 review finding).
-_ROUND_SUBJECT = re.compile(
-    r"^([0-9a-f]+) round (\d+): verdict/advice/correctness/bench$"
-)
-
-
-def _parse_round_revs(log_text: str) -> dict[int, str]:
-    """Round -> verdict-commit rev from ``git log --format='%h %s'``
-    output. Only the exact driver subject matches, and the OLDEST
-    commit per round wins — the gate ran against the builder's
-    end-of-round tree, which the round's FIRST verdict commit sits
-    directly on; any later same-subject commit is not the evidence
-    tree. Duplicates are reported so a deliberate re-pin goes through
-    the explicit ROUND_REVS override, never silently."""
-    out: dict[int, str] = {}
-    for line in reversed(log_text.splitlines()):  # oldest first
-        m = _ROUND_SUBJECT.match(line)
-        if not m:
-            continue
-        rnd = int(m.group(2))
-        if rnd in out:
-            print(
-                f"[freshness] WARNING: multiple 'round {rnd}: verdict...' "
-                f"commits; keeping oldest {out[rnd]}, ignoring {m.group(1)} "
-                "(use ROUND_REVS to override)",
-                file=sys.stderr,
-            )
-            continue
-        out[rnd] = m.group(1)
-    return out
-
-
-def round_revs() -> dict[int, str]:
-    r = subprocess.run(
-        ["git", "log", "--format=%h %s"],
-        cwd=REPO, capture_output=True, text=True,
-    )
-    if r.returncode != 0:
-        raise SystemExit(f"git log failed (rc={r.returncode}):\n{r.stderr}")
-    derived = _parse_round_revs(r.stdout)
-    derived.update(ROUND_REVS)
-    return derived
 
 def _module_file(pkg_root: Path, dotted: str) -> Path | None:
     """``operators.dedup`` -> operators/dedup.py or operators/dedup/__init__.py."""
@@ -373,8 +298,8 @@ def _names_used(src: str) -> set[str]:
     """Names whose Load may reach MODULE level: per-scope free-variable
     analysis, not a flat walk. A flat subtract is wrong in BOTH
     directions (round-9 review findings): counting locally-bound names
-    spuriously folds shadowed module helpers into the hash (wasted
-    driver-window slots), and subtracting scope-insensitively lets a
+    spuriously folds shadowed module helpers into the hash (false
+    drift), and subtracting scope-insensitively lets a
     lambda param / comprehension target suppress a genuine
     enclosing-scope read of a module helper (silent under-inclusion in
     a drift gate). Rules, biased toward over-inclusion when ambiguous:
@@ -676,17 +601,10 @@ def _module_level_nodes(tree: ast.Module) -> list[ast.stmt]:
 
 
 def compute_hashes(repo: Path, include_helpers: bool = False) -> dict[str, str]:
-    """Entry-definition hashes. ``include_helpers`` (v2 mode) folds in
-    the source segments of every module-level workload helper the fn
-    reaches by name (see _helper_closure). v2 is strictly stricter —
-    measured round 9: it invalidates 83 entries' pre-existing evidence
-    (the shared ``load``/``_resolve_sf_dir`` loader changed in r6/r7,
-    flipping ALL pre-r7 evidence at once), more than one 50-slot
-    driver window can re-prove — so the checked-in baseline stays v1
-    until round 10, when the remaining v2-stale cohort (~33 entries)
-    fits a single window and CI can switch via --baseline --helpers
-    (the baseline records its mode in "__meta__" and the CI test
-    follows it)."""
+    """Entry-definition hashes. ``include_helpers`` folds in the source
+    segments of every module-level workload helper the fn reaches by
+    name (see _helper_closure); it is strictly stricter than the
+    default mode."""
     repo = repo.resolve()
     # inspect.getsource reads from the module ALREADY in sys.modules; if
     # the package was imported from a different tree, fn sources would
@@ -761,393 +679,18 @@ def compute_hashes(repo: Path, include_helpers: bool = False) -> dict[str, str]:
     return hashes
 
 
-def newest_green_rounds(repo: Path) -> dict[str, int]:
-    newest: dict[str, int] = {}
-    for f in sorted(repo.glob("CORRECTNESS_r*.json")):
-        m = re.search(r"r0*(\d+)", f.name)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        for name, v in json.loads(f.read_text()).items():
-            if (
-                v.get("rows_match")
-                and v.get("schema_match")
-                and v.get("hash_match") in (True, None)
-                and not v.get("err")
-            ):
-                newest[name] = max(newest.get(name, 0), rnd)
-    return newest
-
-
-_ARTIFACT_GLOBS = (
-    "CORRECTNESS_r*.json",
-    "BENCH_r*.json",
-    "VERDICT.md",
-    "ADVICE.md",
-)
-
-
-def _parse_porcelain_z(stdout: str) -> list[str]:
-    """Paths from ``git status --porcelain=v1 -z`` output.
-
-    NUL-delimited parsing instead of line slicing: quoted paths are
-    never emitted in -z mode, and rename/copy entries ("R"/"C" status)
-    carry the ORIGINAL path as a separate NUL field that must be
-    skipped — naive ``ln[3:]`` would yield the bogus "old -> new"
-    composite (round-15 advice)."""
-    fields = stdout.split("\0")
-    paths: list[str] = []
-    i = 0
-    while i < len(fields):
-        ent = fields[i]
-        i += 1
-        if len(ent) < 4:
-            continue
-        xy, path = ent[:2], ent[3:]
-        if xy[0] in "RC":
-            i += 1  # consume the rename/copy source field
-        paths.append(path)
-    return paths
-
-
-def _dirty_artifacts(repo: Path = REPO) -> list[str]:
-    """Round artifact files the driver dropped that git does not yet
-    track (or tracks with modifications)."""
-    r = subprocess.run(
-        ["git", "status", "--porcelain=v1", "-z", "--", *_ARTIFACT_GLOBS],
-        cwd=repo,
-        capture_output=True,
-        text=True,
-    )
-    return _parse_porcelain_z(r.stdout)
-
-
-def uncommitted_driver_artifacts(repo: Path = REPO) -> list[str]:
-    """CORRECTNESS_r*.json files present on disk but not yet committed
-    — the marker of the DESIGNED round-boundary state. When this is
-    non-empty, a stale freshness ledger is process sequencing (the
-    rebuild needs the round's commit for its worktree), never an
-    engine regression; CI treats it as a skip, not a failure
-    (round-15 verdict item #1)."""
-    r = subprocess.run(
-        ["git", "status", "--porcelain=v1", "-z", "--", "CORRECTNESS_r*.json"],
-        cwd=repo,
-        capture_output=True,
-        text=True,
-    )
-    return _parse_porcelain_z(r.stdout)
-
-
-def _turnover_plan(
-    dirty: list[str], log_text: str, rounds_on_disk: list[int]
-) -> tuple[int | None, str | None]:
-    """(round, commit subject) for the artifact-commit step of
-    --turnover, as a pure decision so tests can exercise it without a
-    repo. Returns (None, None) when there is nothing to commit.
-    Raises SystemExit when the exact driver subject for the detected
-    round already exists in the log — committing a duplicate would
-    NOT re-pin the evidence tree (oldest wins in _parse_round_revs),
-    so the situation needs a human ROUND_REVS decision, never a silent
-    second commit."""
-    if not dirty:
-        return None, None
-    dirty_rounds = [
-        int(m.group(1))
-        for f in dirty
-        if (m := re.search(r"CORRECTNESS_r0*(\d+)\.json$", f))
-    ]
-    rnd = max(dirty_rounds) if dirty_rounds else (
-        max(rounds_on_disk) if rounds_on_disk else None
-    )
-    if rnd is None:
-        raise SystemExit(
-            f"--turnover: dirty artifacts {dirty} but no CORRECTNESS_r*.json "
-            "on disk to infer the round from — commit them manually."
-        )
-    if rnd in _parse_round_revs(log_text):
-        raise SystemExit(
-            f"--turnover: a 'round {rnd}: verdict/advice/correctness/bench' "
-            f"commit already exists, yet {dirty} are dirty. A duplicate "
-            "subject would be ignored by the evidence-tree resolver "
-            "(oldest wins) — commit these by hand and, if the evidence "
-            "tree moved, add an explicit ROUND_REVS override."
-        )
-    return rnd, f"round {rnd}: verdict/advice/correctness/bench"
-
-
-def turnover() -> int:
-    """One-command round-boundary fix (round-14 verdict item #2).
-
-    The designed round-boundary red — the driver drops
-    CORRECTNESS_r{N}.json/BENCH_r{N}.json and the checked-in freshness
-    ledger predates them — recurred as a manual three-step prescription
-    in five consecutive verdicts (r10–r14). This automates it:
-
-      1. if round artifacts are untracked/modified, commit them under
-         the EXACT driver subject ``round N: verdict/advice/
-         correctness/bench`` (the ledger rebuild resolves each round's
-         evidence tree from that subject);
-      2. rebuild tools/window_freshness.json in the ledger's recorded
-         hash mode;
-      3. if the ledger changed, commit it.
-
-    Idempotent: on a clean, current tree it reports nothing-to-do and
-    exits 0.
-    """
-    ledger = REPO / "tools" / "window_freshness.json"
-    # Missing-ledger bootstrap uses the same absent-__meta__ default
-    # (False/v1) as every read path in this file — a divergent default
-    # here would rebuild in a hash mode --drift/--check don't expect
-    # (round-15 advice).
-    mode = False
-    before: str | None = None
-    if ledger.exists():
-        before = ledger.read_text()
-        mode = json.loads(before).get("__meta__", {}).get("helpers", False)
-
-    def git(*args: str) -> None:
-        r = subprocess.run(
-            ["git", *args], cwd=REPO, capture_output=True, text=True
-        )
-        if r.returncode != 0:
-            raise SystemExit(
-                f"git {' '.join(args)} failed (rc={r.returncode}):\n{r.stderr}"
-            )
-
-    # The commits below use explicit pathspecs, so a dirty WORKING TREE
-    # elsewhere is fine — but `git commit -- <paths>` still refuses odd
-    # index states and, more importantly, the round's evidence tree
-    # must contain exactly the artifacts plus whatever was already
-    # committed, never unrelated half-staged engine edits (round-15
-    # advice: a polluted evidence tree defeats the drift detection
-    # this ledger exists for).
-    staged = subprocess.run(
-        ["git", "diff", "--cached", "--quiet"], cwd=REPO
-    )
-    if staged.returncode != 0:
-        raise SystemExit(
-            "--turnover: the git index has staged changes unrelated to "
-            "this command. Commit or unstage them first — the round's "
-            "evidence commit must not absorb them."
-        )
-
-    log = subprocess.run(
-        ["git", "log", "--format=%h %s"], cwd=REPO, capture_output=True, text=True
-    )
-    rounds_on_disk = [
-        int(m.group(1))
-        for f in REPO.glob("CORRECTNESS_r*.json")
-        if (m := re.search(r"r0*(\d+)", f.name))
-    ]
-    dirty = _dirty_artifacts(REPO)
-    rnd, subject = _turnover_plan(dirty, log.stdout, rounds_on_disk)
-    if subject is not None:
-        git("add", "--", *dirty)
-        # Pathspec commit: only the artifact files enter the evidence
-        # tree even if something else were staged (belt to the index
-        # guard's suspenders).
-        git("commit", "-m", subject, "--", *dirty)
-        print(f"[turnover] committed {len(dirty)} artifact(s): {subject!r}")
-    build_baseline(include_helpers=mode)
-    after = ledger.read_text()
-    if after != before:
-        tag = f"round {rnd}" if rnd is not None else "current"
-        git("add", "--", str(ledger))
-        git(
-            "commit",
-            "-m",
-            f"Rebuild freshness ledger against {tag} artifacts",
-            "--",
-            str(ledger),
-        )
-        print("[turnover] committed rebuilt tools/window_freshness.json")
-    if subject is None and after == before:
-        print("[turnover] nothing to do: artifacts committed, ledger current")
-    return 0
-
-
-def stale_ledger_diagnosis(
-    stale: dict, include_helpers: bool, repo: Path = REPO
-) -> str:
-    """Actionable failure text for a baseline-vs-artifacts mismatch.
-
-    Two distinct states produce a stale ledger, and the CI gate must
-    not let one masquerade as the other (round-10 verdict item):
-
-    - The DESIGNED round-boundary state: the driver just wrote a new
-      ``CORRECTNESS_r*.json`` that is still untracked/uncommitted, so
-      the ledger rebuild (which needs the round's verdict commit for
-      its worktree) cannot have run yet. This is process sequencing,
-      not an engine regression, and the message says so explicitly
-      with the exact three-step fix.
-    - A genuinely out-of-date committed ledger (someone committed new
-      artifacts but skipped the rebuild): the message names the rebuild
-      command in the baseline's recorded hash mode.
-    """
-    cmd = "python tools/freshness.py --baseline" + (
-        " --helpers" if include_helpers else ""
-    )
-    dirty = uncommitted_driver_artifacts(repo)
-    if dirty:
-        rounds = sorted({rec[1] for rec in stale.values()})
-        return (
-            "LEDGER STALE — designed round-boundary state, NOT an "
-            f"engine regression. New driver artifact(s) {dirty} are "
-            "not yet committed, so tools/window_freshness.json "
-            "predates them (the rebuild needs the round's commit for "
-            "its per-round worktree). Fix with ONE command: "
-            "`python tools/freshness.py --turnover` — it commits the "
-            "round's artifacts under the exact subject 'round N: "
-            "verdict/advice/correctness/bench', rebuilds the ledger "
-            f"(`{cmd}`), and commits the result. "
-            f"({len(stale)} entries affected; newest green rounds "
-            f"involved: {rounds})"
-        )
-    return (
-        "window_freshness.json is out of date vs the committed "
-        "CORRECTNESS_r*.json ledger (entry: baseline round vs newest "
-        f"green round): {stale} — run "
-        f"`python tools/freshness.py --turnover` (rebuilds via `{cmd}` "
-        "and commits the result)."
-    )
-
-
-def _hashes_at_rev(rev: str, include_helpers: bool = False) -> dict[str, str]:
-    import tempfile
-
-    # Fresh dir per call: a fixed path would collide with leftovers
-    # from a killed prior run (git refuses to add over a registered
-    # worktree) or a concurrent one.
-    wt = Path(tempfile.mkdtemp(prefix=f"freshness_wt_{rev}_")) / "tree"
-
-    def run(cmd, **kw):
-        r = subprocess.run(cmd, capture_output=True, text=True, **kw)
-        if r.returncode != 0:
-            raise SystemExit(
-                f"{' '.join(cmd)} failed (rc={r.returncode}):\n{r.stderr}"
-            )
-        return r
-
-    run(["git", "worktree", "add", "--detach", str(wt), rev], cwd=REPO)
-    try:
-        cmd = [sys.executable, str(REPO / "tools" / "freshness.py"),
-               "--dump", "--repo", str(wt)]
-        if include_helpers:
-            cmd.append("--helpers")
-        return json.loads(run(cmd).stdout)
-    finally:
-        run(["git", "worktree", "remove", "--force", str(wt)], cwd=REPO)
-        import shutil
-
-        shutil.rmtree(wt.parent, ignore_errors=True)
-
-
-def _require_revs(rounds, revs: dict[int, str], context: str) -> None:
-    missing = sorted(set(rounds) - set(revs))
-    if missing:
-        raise SystemExit(
-            f"no git rev resolvable for {context} round(s) {missing} — "
-            "the round's `round N: verdict/advice/correctness/bench` "
-            "commit is not in the log (not yet committed?); commit it "
-            "or add an explicit override to ROUND_REVS in "
-            "tools/freshness.py, then rerun."
-        )
-
-
-def build_baseline(include_helpers: bool = False) -> None:
-    newest = newest_green_rounds(REPO)
-    by_round: dict[int, list[str]] = {}
-    for name, rnd in newest.items():
-        by_round.setdefault(rnd, []).append(name)
-    revs = round_revs()
-    _require_revs(by_round, revs, "green")
-    baseline: dict[str, dict] = {
-        # The CI test recomputes current hashes in the SAME mode the
-        # baseline was built with (sort_keys puts __meta__ first).
-        "__meta__": {"helpers": include_helpers},
-    }
-    for rnd, names in sorted(by_round.items()):
-        rev = revs[rnd]
-        hashes = _hashes_at_rev(rev, include_helpers)
-        for name in names:
-            if name in hashes:
-                baseline[name] = {"round": rnd, "rev": rev, "hash": hashes[name]}
-            else:
-                # Renamed/removed since its green row — treat as unproven.
-                baseline[name] = {"round": rnd, "rev": rev, "hash": None}
-    out = REPO / "tools" / "window_freshness.json"
-    out.write_text(json.dumps(baseline, indent=1, sort_keys=True) + "\n")
-    print(f"wrote {out} ({len(baseline) - 1} entries, helpers={include_helpers})")
-
 
 def main() -> int:
     p = argparse.ArgumentParser()
     p.add_argument("--dump", action="store_true")
-    p.add_argument("--baseline", action="store_true")
     p.add_argument(
         "--helpers",
         action="store_true",
-        help="v2 hash mode: also fold in the source segments of every "
-        "module-level workload helper the entry fn reaches by name "
-        "(see compute_hashes docstring for the round-10 switch plan)",
-    )
-    p.add_argument(
-        "--drift",
-        action="store_true",
-        help="report entries whose CURRENT definition hash differs from "
-        "the checked-in baseline (window-rotation planning). Hash mode: "
-        "the baseline's recorded __meta__ mode, or --helpers to preview "
-        "drift under v2 before switching the ledger.",
-    )
-    p.add_argument(
-        "--turnover",
-        action="store_true",
-        help="one-command round-boundary fix: commit untracked driver "
-        "artifacts under the exact driver subject, rebuild the ledger "
-        "in its recorded hash mode, commit the rebuilt ledger. "
-        "Idempotent on a clean tree.",
+        help="also fold in the source segments of every module-level "
+        "workload helper the entry fn reaches by name",
     )
     p.add_argument("--repo", default=str(REPO))
     args = p.parse_args()
-    if args.turnover:
-        return turnover()
-    if args.drift:
-        baseline = json.loads((REPO / "tools" / "window_freshness.json").read_text())
-        base_mode = baseline.get("__meta__", {}).get("helpers", False)
-        mode = args.helpers or base_mode
-        current = compute_hashes(Path(args.repo), include_helpers=mode)
-        if mode != base_mode:
-            # Previewing a different hash mode: the baseline's recorded
-            # hashes are incomparable — recompute each entry's hash at
-            # its green-round tree in the REQUESTED mode (worktree per
-            # round, like --baseline does). Slower but apples-to-apples.
-            by_round: dict[int, list[str]] = {}
-            for name, rec in baseline.items():
-                if name != "__meta__":
-                    by_round.setdefault(rec["round"], []).append(name)
-            revs = round_revs()
-            _require_revs(by_round, revs, "baseline")
-            green_hashes: dict[str, str | None] = {}
-            for rnd, names in sorted(by_round.items()):
-                at_rev = _hashes_at_rev(revs[rnd], include_helpers=mode)
-                for n in names:
-                    green_hashes[n] = at_rev.get(n)
-        else:
-            green_hashes = {
-                n: rec["hash"] for n, rec in baseline.items() if n != "__meta__"
-            }
-        out = {}
-        for name, h in sorted(current.items()):
-            rec = baseline.get(name)
-            if rec is None:
-                out[name] = {"why": "no baseline record"}
-            elif green_hashes.get(name) is None:
-                out[name] = {"why": f"unresolvable at green r{rec['round']}",
-                             "round": rec["round"], "rev": rec["rev"]}
-            elif green_hashes[name] != h:
-                out[name] = {"why": "drifted", "round": rec["round"], "rev": rec["rev"]}
-        print(json.dumps({"mode_helpers": mode, "n": len(out), "entries": out}, indent=1))
-        return 0
     if args.dump:
         print(
             json.dumps(
@@ -1156,9 +699,6 @@ def main() -> int:
                 sort_keys=True,
             )
         )
-        return 0
-    if args.baseline:
-        build_baseline(include_helpers=args.helpers)
         return 0
     p.print_help()
     return 1
