@@ -9,18 +9,20 @@ min-label propagation expressed in DataFrame ops:
 
     label(v) <- min(label(v), min over neighbors u of label(u))
 
-repeated to fixpoint. Each round is one shuffle (join + groupBy-min);
-rounds needed = component diameter. Near-dup clusters are small and
-dense (diameter 2-4 in practice), so this converges in a handful of
-rounds — for adversarial chain-shaped graphs at web scale, swap in the
-large-star/small-star alternating algorithm (same join/agg primitives,
-O(log n) rounds). ``localCheckpoint`` truncates the growing lineage each
-round so the plan stays bounded.
+repeated to fixpoint. Labels only decrease and the node set is finite,
+so the loop always ends, after diameter + 1 rounds; there is no round
+cap that could return unconverged labels. Each round is one shuffle
+(join + groupBy-min) and one Spark action: the eager ``localCheckpoint``
+that truncates the lineage also counts the changed labels through an
+``Observation``, so detecting convergence costs no job of its own. Two
+setup checkpoints (edges, initial labels) precede the rounds. Near-dup
+clusters are small and dense (diameter 2-4 in practice), so this takes
+a handful of rounds; a chain-shaped component of n nodes takes n.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 
@@ -28,7 +30,6 @@ def resolve_clusters(
     pairs: DataFrame,
     vertices: DataFrame,
     id_col: str = "doc_id",
-    max_iter: int = 50,
 ) -> DataFrame:
     """Connected components over candidate pairs; cluster id = min member.
 
@@ -48,105 +49,34 @@ def resolve_clusters(
         F.col(id_col).alias("node"), F.col(id_col).cast("long").alias("label")
     ).localCheckpoint()
 
-    for _ in range(max_iter):
+    while True:
         # Propagate each node's label to its neighbors, then take the min
-        # of own + incoming labels. One shuffle per round.
+        # of own + incoming labels. One shuffle per round. The node's own
+        # row carries its previous label as ``old`` (null on incoming
+        # rows), so the checkpoint job itself counts the labels that
+        # moved; a node first reached this round (old null) counts too.
         incoming = edges.join(labels, edges["src"] == labels["node"]).select(
-            F.col("dst").alias("node"), F.col("label")
+            F.col("dst").alias("node"),
+            F.col("label"),
+            F.lit(None).cast("long").alias("old"),
         )
-        new_labels = (
-            labels.union(incoming)
+        obs = Observation()
+        labels = (
+            labels.select("node", "label", F.col("label").alias("old"))
+            .union(incoming)
             .groupBy("node")
-            .agg(F.min("label").alias("label"))
+            .agg(F.min("label").alias("label"), F.min("old").alias("old"))
+            .observe(
+                obs,
+                F.count_if(~F.col("label").eqNullSafe(F.col("old"))).alias("n"),
+            )
+            .select("node", "label")
         ).localCheckpoint()
-        changed = (
-            new_labels.alias("n")
-            .join(labels.alias("o"), "node")
-            .filter(F.col("n.label") != F.col("o.label"))
-        )
-        labels = new_labels
-        if changed.isEmpty():
+        if obs.get["n"] == 0:
             break
 
     return labels.select(
         F.col("node").alias(id_col), F.col("label").alias("cluster_id")
-    )
-
-
-def _symmetrize(e: DataFrame) -> DataFrame:
-    return (
-        e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .filter(F.col("u") != F.col("v"))
-        .distinct()
-    )
-
-
-def _large_star(adj: DataFrame) -> DataFrame:
-    """For each node u: connect every LARGER neighbor to min(N(u) ∪ {u})."""
-    mins = adj.groupBy("u").agg(F.min("v").alias("mn"))
-    m = F.least(F.col("mn"), F.col("u"))
-    return (
-        adj.join(mins, "u")
-        .filter(F.col("v") > F.col("u"))
-        .select(F.col("v").alias("u"), m.alias("v"))
-    )
-
-
-def _small_star(adj: DataFrame) -> DataFrame:
-    """For each node u over its SMALLER neighbors N<: connect
-    (N< ∪ {u}) \\ {m} to m = min(N<)."""
-    dir_e = adj.filter(F.col("v") < F.col("u"))
-    mins = dir_e.groupBy("u").agg(F.min("v").alias("m"))
-    p1 = (
-        dir_e.join(mins, "u")
-        .filter(F.col("v") != F.col("m"))
-        .select(F.col("v").alias("u"), F.col("m").alias("v"))
-    )
-    p2 = mins.select("u", F.col("m").alias("v"))
-    return p1.union(p2)
-
-
-def resolve_clusters_star(
-    pairs: DataFrame,
-    vertices: DataFrame,
-    id_col: str = "doc_id",
-    max_iter: int = 25,
-) -> DataFrame:
-    """Connected components by alternating large-star/small-star
-    (Kiveris et al., "Connected Components in MapReduce and Beyond") —
-    O(log n) rounds regardless of component diameter, unlike plain
-    min-label propagation which needs diameter rounds. Each round is two
-    join+agg passes; use this over :func:`resolve_clusters` when
-    components can be chain-shaped (e.g. transitive near-dup chains at
-    web scale).
-
-    Same contract as :func:`resolve_clusters`: returns
-    (``id_col``, ``cluster_id``) with cluster id = min member, singletons
-    included.
-    """
-    edges = _symmetrize(
-        pairs.select(F.col("d1").alias("u"), F.col("d2").alias("v"))
-    ).localCheckpoint()
-
-    for _ in range(max_iter):
-        e1 = _symmetrize(_large_star(edges)).localCheckpoint()
-        e2 = _symmetrize(_small_star(e1)).localCheckpoint()
-        if e2.exceptAll(edges).isEmpty() and edges.exceptAll(e2).isEmpty():
-            edges = e2
-            break
-        edges = e2
-
-    # Converged edges form stars rooted at component minima.
-    labels = edges.groupBy("u").agg(F.min("v").alias("nbr_min"))
-    return (
-        vertices.select(F.col(id_col).alias("node"))
-        .join(labels, F.col("node") == F.col("u"), "left")
-        .select(
-            F.col("node").alias(id_col),
-            F.least(
-                F.col("node"), F.coalesce(F.col("nbr_min"), F.col("node"))
-            ).cast("long").alias("cluster_id"),
-        )
     )
 
 
@@ -324,7 +254,6 @@ def incremental_dedup(
 
 __all__ = [
     "resolve_clusters",
-    "resolve_clusters_star",
     "keep_list",
     "minhash_signature",
     "band_buckets",

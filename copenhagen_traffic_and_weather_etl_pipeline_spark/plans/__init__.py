@@ -12,8 +12,6 @@ streaming tick itself, ``streaming.ingest_and_refresh``.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 
 
@@ -85,7 +83,7 @@ def materialize_once(df: DataFrame) -> DataFrame:
     pair-generating self-join referenced by degree/orientation/
     adjacency/count subtrees with different projections (exact count
     3.50 s -> 3.34 s, sampled 1.98 s -> 1.79 s). Measure per call
-    site with SPARK_GRAFT_NO_MATERIALIZE=1 before adopting.
+    site, with and without the call, before adopting.
 
     Why not ``persist()``: cached plans forgo AQE shuffle coalescing
     and pay a columnar serialization round-trip — measured SLOWER than
@@ -97,22 +95,15 @@ def materialize_once(df: DataFrame) -> DataFrame:
     the job and the retry starts clean.
 
     **Durability switch**: on a long-running 1000-executor job where
-    executor churn is routine, set ``SPARK_GRAFT_RELIABLE_CHECKPOINT=1``
-    (env) or ``spark.cph_etl.reliableCheckpoint=true`` (spark.conf) to
-    swap in reliable ``df.checkpoint()`` — same lineage cut, blocks on
-    replicated storage. Requires a checkpoint dir: set it via
+    executor churn is routine, set ``spark.cph_etl.reliableCheckpoint=true``
+    (spark.conf) to swap in reliable ``df.checkpoint()`` — same lineage
+    cut, blocks on replicated storage. Requires a checkpoint dir: set it via
     ``sparkContext.setCheckpointDir`` or ``spark.cph_etl.checkpointDir``
     (the conf is applied on first use here). Call sites stay identical;
     only the durability/cost point moves. Plan gates that need the
     upstream subtree must inspect the pre-checkpoint frame (the final
     plan sees an RDD scan).
-
-    ``SPARK_GRAFT_NO_MATERIALIZE=1`` turns this into the identity — the
-    A/B knob for measuring what the materialization buys on a given
-    query/scale without editing call sites.
     """
-    if os.environ.get("SPARK_GRAFT_NO_MATERIALIZE"):
-        return df
     if _reliable_checkpoint_enabled(df):
         # Reliable checkpoints write eagerly through the RDD API; the
         # lazy flavor only applies to localCheckpoint. Eager is the
@@ -124,8 +115,6 @@ def materialize_once(df: DataFrame) -> DataFrame:
 
 
 def _reliable_checkpoint_enabled(df: DataFrame) -> bool:
-    if os.environ.get("SPARK_GRAFT_RELIABLE_CHECKPOINT"):
-        return True
     try:
         return (
             df.sparkSession.conf.get("spark.cph_etl.reliableCheckpoint", "false")
@@ -143,11 +132,9 @@ def _ensure_checkpoint_dir(df: DataFrame) -> None:
     sc = df.sparkSession.sparkContext
     if sc.getCheckpointDir() is not None:
         return
-    conf_dir = os.environ.get("SPARK_GRAFT_CHECKPOINT_DIR")
-    if conf_dir is None:
-        try:
-            conf_dir = df.sparkSession.conf.get("spark.cph_etl.checkpointDir", None)
-        except Exception:  # noqa: BLE001
-            conf_dir = None
+    try:
+        conf_dir = df.sparkSession.conf.get("spark.cph_etl.checkpointDir", None)
+    except Exception:  # noqa: BLE001
+        conf_dir = None
     if conf_dir:
         sc.setCheckpointDir(conf_dir)

@@ -42,3 +42,19 @@ def test_resolve_clusters_merging_components(spark):
         r["doc_id"]: r["cluster_id"] for r in resolve_clusters(pairs, vertices).collect()
     }
     assert got == {2: 2, 5: 2, 6: 2, 7: 2, 8: 2}
+
+
+def test_resolve_clusters_converges_on_long_path(spark):
+    # A 60-node path has diameter 59: the min label needs 59 rounds to
+    # reach the far end. Resolution has no round cap: it runs to
+    # convergence, so every node lands in the one cluster rooted at 0.
+    n = 60
+    pairs = spark.createDataFrame(
+        [(i, i + 1) for i in range(n - 1)], "d1 long, d2 long"
+    )
+    vertices = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
+    got = {
+        r["doc_id"]: r["cluster_id"]
+        for r in resolve_clusters(pairs, vertices).collect()
+    }
+    assert got == {i: 0 for i in range(n)}

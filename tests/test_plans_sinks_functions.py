@@ -259,13 +259,6 @@ def test_materialize_once_local_and_reliable_paths(spark, tmp_path):
         spark.conf.unset("spark.cph_etl.reliableCheckpoint")
         spark.conf.unset("spark.cph_etl.checkpointDir")
 
-    # A/B identity knob.
-    os.environ["SPARK_GRAFT_NO_MATERIALIZE"] = "1"
-    try:
-        assert materialize_once(df) is df
-    finally:
-        del os.environ["SPARK_GRAFT_NO_MATERIALIZE"]
-
 
 def test_fan_out_small_scan_guard(spark):
     """Fans an under-partitioned frame to defaultParallelism; identity

@@ -11,7 +11,6 @@ from copenhagen_traffic_and_weather_etl_pipeline_spark.testdata import sf_dir as
 from copenhagen_traffic_and_weather_etl_pipeline_spark.operators.dedup import (
     keep_list,
     resolve_clusters,
-    resolve_clusters_star,
 )
 from copenhagen_traffic_and_weather_etl_pipeline_spark.sources.rest import (
     fetch_with_retry,
@@ -121,28 +120,6 @@ def test_resolve_clusters_matches_union_find(spark, graph):
     }
     assert kept == set(_union_find(n, pairs_data).values())
 
-    # The O(log n)-round star algorithm must agree exactly.
-    got_star = {
-        r["doc_id"]: r["cluster_id"]
-        for r in resolve_clusters_star(pairs, vertices).collect()
-    }
-    assert got_star == _union_find(n, pairs_data)
-
-
-def test_star_resolution_on_long_chain(spark):
-    # A 40-node path is the adversarial diameter case min-label
-    # propagation is slow on; the star algorithm must still collapse it
-    # to a single cluster rooted at 0.
-    n = 40
-    pairs = spark.createDataFrame(
-        [(i, i + 1) for i in range(n - 1)], "d1 long, d2 long"
-    )
-    vertices = spark.createDataFrame([(i,) for i in range(n)], "doc_id long")
-    got = {
-        r["doc_id"]: r["cluster_id"]
-        for r in resolve_clusters_star(pairs, vertices).collect()
-    }
-    assert got == {i: 0 for i in range(n)}
 
 
 # ---------------------------------------------------------------------------
