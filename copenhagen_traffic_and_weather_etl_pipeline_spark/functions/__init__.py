@@ -9,8 +9,9 @@ Reference parity map (SURVEY.md §2.6):
   which is the only thing the reference ever does with the parsed TIME:
   bigquery_scheduled_query.sql:8-15)
 - D4 strftime date/time stamping      -> :func:`stamp_audit_columns`
-- M1 Kelvin→Celsius (x - 273.15)      -> :func:`kelvin_to_celsius`
-- T1/T2 "lat,lon" concat + str cast   -> :func:`coord_string`
+- M1 Kelvin→Celsius (x - 273.15)      -> ``operators.flatten._celsius``
+- T1/T2 "lat,lon" concat + str cast   -> ``operators.flatten._coords``
+  (both SQL strings: flatten is their only caller)
 - T3 base64 payload decode            -> :func:`decode_pubsub_payload`
 """
 
@@ -50,24 +51,6 @@ def stamp_audit_columns(ts: Column | None = None) -> dict[str, Column]:
         "date": F.date_format(ts, DATE_FMT),
         "time": F.date_format(ts, TIME_FMT),
     }
-
-
-def kelvin_to_celsius(col: Column | str) -> Column:
-    """M1/P5: x - 273.15 (deployment_function.py:140-143). Same literal
-    arithmetic as the reference so results match bit-for-bit."""
-    c = F.col(col) if isinstance(col, str) else col
-    return c - F.lit(KELVIN_OFFSET)
-
-
-def coord_string(lat: Column | str, lon: Column | str) -> Column:
-    """T1/T2/P6/P7: str(lat) + ',' + str(lon) (deployment_function.py:119-121).
-    Numeric inputs are cast to string inside the concat. Uses null-propagating
-    ``concat`` (not ``concat_ws``, which skips nulls): a missing coordinate
-    must surface as NULL so the flatten null-gate drops the row, matching the
-    reference's KeyError-drop (deployment_function.py:123-125)."""
-    la = F.col(lat) if isinstance(lat, str) else lat
-    lo = F.col(lon) if isinstance(lon, str) else lon
-    return F.concat(la.cast("string"), F.lit(","), lo.cast("string"))
 
 
 def decode_pubsub_payload(col: Column | str) -> Column:

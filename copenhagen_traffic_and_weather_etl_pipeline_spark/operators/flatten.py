@@ -2,7 +2,8 @@
 
 Re-expresses the reference's row-at-a-time ``handle_traffic_data`` /
 ``handle_weather_data`` (deployment_function.py:92-127, :131-178) as set
-operations: one ``from_json`` + one ``select`` per source. The whole
+operations: per source, one ``from_json`` projection, one field
+projection, one null-gate filter and one cast projection. The whole
 transform is a narrow, shuffle-free pipeline — at 100 TB of payloads it
 parallelizes per input split with no data movement.
 
@@ -17,18 +18,18 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from ..functions import (
-    compose_event_ts,
-    coord_string,
-    kelvin_to_celsius,
-    stamp_audit_columns,
-)
+from ..functions import KELVIN_OFFSET, compose_event_ts, stamp_audit_columns
 from ..schemas import (
     OPENWEATHER_RESPONSE_SCHEMA,
     TOMTOM_RESPONSE_SCHEMA,
     TRAFFIC_SCHEMA,
     WEATHER_SCHEMA,
 )
+
+# Every expression below is a SQL string built once at import. A plan is
+# then a handful of driver->JVM calls (one per projection/filter), where
+# composing the same expressions from ``Column`` objects cost one py4j
+# round trip per column, alias, cast and ``&`` — thousands per tick.
 
 # Payload-derived columns per source. The reference raises KeyError (and
 # drops the whole row) when ANY of these is missing from the API JSON
@@ -63,19 +64,123 @@ _WEATHER_REQUIRED = [
 ]
 
 
-def _all_present(cols: list[str]) -> Column:
-    pred = F.lit(True)
-    for c in cols:
-        pred = pred & F.col(c).isNotNull()
-    return pred
+def _coords(lat: str, lon: str) -> str:
+    """T1/T2/P6/P7: str(lat) + ',' + str(lon) (deployment_function.py:119-121).
+    Numeric inputs are cast to string inside the concat. Uses null-propagating
+    ``concat`` (not ``concat_ws``, which skips nulls): a missing coordinate
+    must surface as NULL so the null-gate drops the row, matching the
+    reference's KeyError-drop (deployment_function.py:123-125)."""
+    return f"concat(CAST({lat} AS STRING), ',', CAST({lon} AS STRING))"
 
 
-def _audit_cols(stamp_date: Column | None, stamp_time: Column | None) -> list[Column]:
-    """P8: run-time date/time string stamps (deployment_function.py:61-63)."""
-    if stamp_date is not None and stamp_time is not None:
-        return [stamp_date.alias("date"), stamp_time.alias("time")]
-    stamps = stamp_audit_columns()
-    return [stamps["date"].alias("date"), stamps["time"].alias("time")]
+def _celsius(kelvin: str) -> str:
+    """M1/P5: x - 273.15 (deployment_function.py:140-143), a double
+    literal (not a SQL decimal one) so results match the reference
+    bit-for-bit."""
+    return f"{kelvin} - {KELVIN_OFFSET}D"
+
+
+def _gate(cols: list[str]) -> str:
+    return " AND ".join(f"{c} IS NOT NULL" for c in cols)
+
+
+def _casts(schema) -> list[str]:
+    """The DDL column order and types (bigquery_table_creation_queries.sql)."""
+    return [
+        f"CAST({f.name} AS {f.dataType.simpleString()}) AS {f.name}"
+        for f in schema.fields
+    ]
+
+
+_SEG = "doc.flowSegmentData"
+# try_element_at: ANSI-safe [0]/[-1] — an empty/missing coordinate array
+# yields NULL (row then dropped by the null-gate) instead of an
+# INVALID_ARRAY_INDEX task failure.
+_FIRST = f"try_element_at({_SEG}.coordinates.coordinate, 1)"
+_LAST = f"try_element_at({_SEG}.coordinates.coordinate, -1)"
+_TRAFFIC_DOC = f"from_json(payload, '{TOMTOM_RESPONSE_SCHEMA.simpleString()}') AS doc"
+_TRAFFIC_FIELDS = [
+    "date",
+    "time",
+    "geo_name",
+    "lat AS latitude",
+    "lon AS longitude",
+    f"{_SEG}.frc AS road_class",
+    f"{_SEG}.currentSpeed AS current_speed",
+    f"{_SEG}.freeFlowSpeed AS free_flow_speed",
+    f"{_SEG}.currentTravelTime AS current_travel_time",
+    f"{_SEG}.freeFlowTravelTime AS free_flow_travel_time",
+    f"{_SEG}.confidence AS confidence",
+    f"{_SEG}.roadClosure AS road_closure",
+    f"{_coords('lat', 'lon')} AS original_coordinates",
+    f"{_coords(f'{_FIRST}.latitude', f'{_FIRST}.longitude')} AS first_coordinates",
+    f"{_coords(f'{_LAST}.latitude', f'{_LAST}.longitude')} AS last_coordinates",
+]
+_TRAFFIC_GATE = _gate(_TRAFFIC_REQUIRED)
+_TRAFFIC_CASTS = _casts(TRAFFIC_SCHEMA)
+
+# ANSI-safe weather[0]: empty array -> NULL -> row dropped, like the
+# reference's IndexError/KeyError drop (deployment_function.py:174-176).
+_W0 = "try_element_at(doc.weather, 1)"
+_WEATHER_DOC = f"from_json(payload, '{OPENWEATHER_RESPONSE_SCHEMA.simpleString()}') AS doc"
+_WEATHER_FIELDS = [
+    "date",
+    "time",
+    "geo_name",
+    f"{_coords('lat', 'lon')} AS original_coordinates",
+    "doc.sys.country AS country",
+    "doc.name AS city_area_name",
+    f"{_W0}.main AS weather_main",
+    f"{_W0}.description AS weather_description",
+    f"{_celsius('doc.main.temp')} AS temperature",
+    f"{_celsius('doc.main.feels_like')} AS feels_like",
+    f"{_celsius('doc.main.temp_min')} AS temp_min",
+    f"{_celsius('doc.main.temp_max')} AS temp_max",
+    "doc.main.pressure AS pressure",
+    "doc.main.humidity AS humidity_percent",
+    "doc.visibility AS visibility",
+    "doc.wind.speed AS wind_speed",
+    "doc.wind.deg AS wind_direction_degrees",
+    "doc.clouds.`all` AS cloudiness_percent",
+]
+_WEATHER_GATE = _gate(_WEATHER_REQUIRED)
+_WEATHER_CASTS = _casts(WEATHER_SCHEMA)
+
+# The reference gates on status_code == 200 (deployment_function.py:82-88).
+_OK = "error IS NULL AND status_code = 200"
+_ERRORED = "error IS NOT NULL OR status_code != 200"
+
+
+def _flatten(
+    fetch_df: DataFrame,
+    doc: str,
+    fields: list[str],
+    gate: str,
+    casts: list[str],
+    stamp_date: Column | None,
+    stamp_time: Column | None,
+) -> DataFrame:
+    """One projection parses the payload once (P8: the run-time date/time
+    string stamps, deployment_function.py:61-63, ride along), one
+    extracts the fields, the null-gate drops incomplete rows (all or
+    nothing, like the reference's KeyError path) and the last projection
+    casts to the DDL."""
+    if stamp_date is None or stamp_time is None:
+        stamps = stamp_audit_columns()
+        stamp_date, stamp_time = stamps["date"], stamps["time"]
+    return (
+        fetch_df.select(
+            stamp_date.alias("date"),
+            stamp_time.alias("time"),
+            "geo_name",
+            "lat",
+            "lon",
+            F.expr(doc),
+        )
+        .selectExpr(*fields)
+        .where(gate)
+        .selectExpr(*casts)
+    )
 
 
 def flatten_traffic(
@@ -94,37 +199,14 @@ def flatten_traffic(
     Rows whose payload lacks ``flowSegmentData`` are dropped (the
     reference returns None and skips export: :123-125, :212-214).
     """
-    doc = F.from_json(F.col("payload"), TOMTOM_RESPONSE_SCHEMA)
-    seg = doc["flowSegmentData"]
-    # try_element_at: ANSI-safe [0]/[-1] — an empty/missing coordinate array
-    # yields NULL (row then dropped by the null-gate) instead of an
-    # INVALID_ARRAY_INDEX task failure.
-    first = F.try_element_at(seg["coordinates"]["coordinate"], F.lit(1))
-    last = F.try_element_at(seg["coordinates"]["coordinate"], F.lit(-1))
-    out = fetch_df.select(
-        *_audit_cols(stamp_date, stamp_time),
-        F.col("geo_name"),
-        F.col("lat").alias("latitude"),
-        F.col("lon").alias("longitude"),
-        seg["frc"].alias("road_class"),
-        seg["currentSpeed"].alias("current_speed"),
-        seg["freeFlowSpeed"].alias("free_flow_speed"),
-        seg["currentTravelTime"].alias("current_travel_time"),
-        seg["freeFlowTravelTime"].alias("free_flow_travel_time"),
-        seg["confidence"].alias("confidence"),
-        seg["roadClosure"].alias("road_closure"),
-        coord_string(F.col("lat"), F.col("lon")).alias("original_coordinates"),
-        coord_string(first["latitude"], first["longitude"]).alias(
-            "first_coordinates"
-        ),
-        coord_string(last["latitude"], last["longitude"]).alias(
-            "last_coordinates"
-        ),
-    )
-    # All-or-nothing drop: any missing payload field nulls its column and
-    # the row is dropped, like the reference's KeyError path.
-    return out.filter(_all_present(_TRAFFIC_REQUIRED)).select(
-        *[F.col(f.name).cast(f.dataType) for f in TRAFFIC_SCHEMA.fields]
+    return _flatten(
+        fetch_df,
+        _TRAFFIC_DOC,
+        _TRAFFIC_FIELDS,
+        _TRAFFIC_GATE,
+        _TRAFFIC_CASTS,
+        stamp_date,
+        stamp_time,
     )
 
 
@@ -140,32 +222,14 @@ def flatten_weather(
     columns (:140-143), and the 18-column DDL order
     (bigquery_table_creation_queries.sql:1-20).
     """
-    doc = F.from_json(F.col("payload"), OPENWEATHER_RESPONSE_SCHEMA)
-    # ANSI-safe weather[0]: empty array -> NULL -> row dropped, like the
-    # reference's IndexError/KeyError drop (deployment_function.py:174-176).
-    w0 = F.try_element_at(doc["weather"], F.lit(1))
-    main = doc["main"]
-    out = fetch_df.select(
-        *_audit_cols(stamp_date, stamp_time),
-        F.col("geo_name"),
-        coord_string(F.col("lat"), F.col("lon")).alias("original_coordinates"),
-        doc["sys"]["country"].alias("country"),
-        doc["name"].alias("city_area_name"),
-        w0["main"].alias("weather_main"),
-        w0["description"].alias("weather_description"),
-        kelvin_to_celsius(main["temp"]).alias("temperature"),
-        kelvin_to_celsius(main["feels_like"]).alias("feels_like"),
-        kelvin_to_celsius(main["temp_min"]).alias("temp_min"),
-        kelvin_to_celsius(main["temp_max"]).alias("temp_max"),
-        main["pressure"].alias("pressure"),
-        main["humidity"].alias("humidity_percent"),
-        doc["visibility"].alias("visibility"),
-        doc["wind"]["speed"].alias("wind_speed"),
-        doc["wind"]["deg"].alias("wind_direction_degrees"),
-        doc["clouds"]["all"].alias("cloudiness_percent"),
-    )
-    return out.filter(_all_present(_WEATHER_REQUIRED)).select(
-        *[F.col(f.name).cast(f.dataType) for f in WEATHER_SCHEMA.fields]
+    return _flatten(
+        fetch_df,
+        _WEATHER_DOC,
+        _WEATHER_FIELDS,
+        _WEATHER_GATE,
+        _WEATHER_CASTS,
+        stamp_date,
+        stamp_time,
     )
 
 
@@ -175,14 +239,9 @@ def split_errors(fetch_df: DataFrame) -> tuple[DataFrame, DataFrame]:
     The reference gates on status_code == 200 (deployment_function.py:82-88)
     and drops None/empty frames (:212-214) while logging; here failed rows
     are preserved in a side channel so a job can audit them without dying.
+    A row with neither an error nor a status lands in neither channel.
     """
-    ok = fetch_df.filter(
-        (F.col("error").isNull()) & (F.col("status_code") == 200)
-    )
-    bad = fetch_df.filter(
-        (F.col("error").isNotNull()) | (F.col("status_code") != 200)
-    )
-    return ok, bad
+    return fetch_df.where(_OK), fetch_df.where(_ERRORED)
 
 
 __all__ = ["flatten_traffic", "flatten_weather", "split_errors", "compose_event_ts"]

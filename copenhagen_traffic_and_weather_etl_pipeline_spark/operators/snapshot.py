@@ -10,11 +10,16 @@ subquery), F0 (latest-snapshot filter), A1 (global MAX), D1-D3 (date/time
 parse + compose).
 
 Scale notes (100 TB): the scalar-subquery MAX is a partial+final agg over
-one column — cheap. The USING join shuffles both sides on the 4-key tuple;
-with date-partitioned tables the latest-snapshot filter prunes to a single
-partition *before* the join when pushed below it (``latest_snapshot_join``
-filters each side first — semantically identical because the filter is on
-join keys, and it turns a full-table shuffle into a ≤1-partition one).
+one column, but over the whole history. The USING join shuffles both sides
+on the 4-key tuple; ``latest_snapshot_join`` filters each side first —
+semantically identical because the filter is on join keys — so the join
+reads one snapshot, yet the MAX still scans every row ever written. The
+hourly refresh (``streaming.ingest_and_refresh``) avoids that scan: it
+knows the stamp its batch just appended and calls
+``latest_snapshot_since``, which reads one date partition and, through
+parquet min/max statistics on ``time``, one tick's files of it. The full
+``latest_snapshot_join`` stays the path for a tick that cannot vouch for
+its stamp (no traffic row landed, or some were quarantined).
 """
 
 from __future__ import annotations
@@ -71,26 +76,51 @@ def latest_snapshot_join(
     return using_join(t, w, keys)
 
 
-def refresh_snapshot_pruned(
-    spark, traffic_path: str, weather_path: str, keys: list[str] | None = None
+def latest_snapshot_since(
+    traffic: DataFrame,
+    weather: DataFrame,
+    stamp: tuple[str, str],
+    keys: list[str] | None = None,
 ) -> DataFrame:
-    """Incremental snapshot refresh over date-partitioned fact tables
-    (SURVEY §6): resolve the newest date from the partition column (a
-    metadata-scale job — the scan reads no data columns), then run the
-    flagship join on ONLY that partition of each side.
+    """The flagship query when ``stamp`` — a (``date``, ``time``) pair
+    of the pipeline's ``DATE_FMT``/``TIME_FMT`` strings — is known to
+    be present in ``traffic``: the snapshot cannot be older than it, so
+    only stamps >= ``stamp`` are read. Equal to
+    ``latest_snapshot_join(traffic, weather)`` under that precondition.
 
-    The one-value ``first()`` is a planning-time literal fetch, not a
-    data collect: it's what makes the subsequent filters *static*
-    partition pruning (PartitionFilters at the scan) instead of a
-    full-history read. At 100 TB this is the difference between touching
-    one day's directory and every directory ever written.
+    One ``LIMIT 1`` probe asks whether any traffic row is newer, pruned
+    to ``date >= stamp.date`` (static partition pruning) with ``time``
+    pushed down for parquet row-group skipping:
+
+    - none (the tick just appended the newest stamp): both sides are
+      filtered by the literals ``date = d AND time = t`` and joined —
+      one partition, the files of one tick, a static broadcast join;
+    - some (a late or replayed batch): the flagship join runs over both
+      sides pruned to stamps >= ``stamp``, so the snapshot never moves
+      backwards.
+
+    The probe is one job: ``coalesce(1)`` hands the pruned files to one
+    task, where ``limit``'s own scale-up would launch a job per wave of
+    files; with ``time`` pushed down, that task reads little more than
+    the footers of one day's files (``compact_table`` keeps their count
+    down where a day holds thousands).
+
+    The canonical zero-padded strings sort like the times they stamp,
+    which is what makes string predicates here agree with
+    ``compose_event_ts`` in ``latest_snapshot_join``.
     """
-    latest = (
-        spark.read.parquet(traffic_path).agg(F.max("date").alias("d")).first()["d"]
-    )
-    t = spark.read.parquet(traffic_path).filter(F.col("date") == latest)
-    w = spark.read.parquet(weather_path).filter(F.col("date") == latest)
-    return latest_snapshot_join(t, w, keys)
+    d, t = F.lit(stamp[0]), F.lit(stamp[1])
+    date, time = F.col("date"), F.col("time")
+    newer = (date > d) | ((date == d) & (time > t))
+    if traffic.where(date >= d).where(newer).coalesce(1).limit(1).collect():
+        since = (date > d) | ((date == d) & (time >= t))
+        return latest_snapshot_join(
+            traffic.where(date >= d).where(since),
+            weather.where(date >= d).where(since),
+            keys,
+        )
+    at = (date == d) & (time == t)
+    return using_join(traffic.where(at), weather.where(at), keys)
 
 
 def latest_snapshot_join_faithful(

@@ -67,6 +67,15 @@ WEATHER_SCHEMA = T.StructType(
 # (bigquery_scheduled_query.sql:6).
 JOIN_KEYS = ["date", "time", "geo_name", "original_coordinates"]
 
+# latest_joined_data, the USING join's output: the four keys, then the
+# traffic and the weather non-key columns. Declared so the dashboard read
+# of a published snapshot infers nothing (inference is a Spark job).
+SNAPSHOT_SCHEMA = T.StructType(
+    [TRAFFIC_SCHEMA[k] for k in JOIN_KEYS]
+    + [f for f in TRAFFIC_SCHEMA.fields if f.name not in JOIN_KEYS]
+    + [f for f in WEATHER_SCHEMA.fields if f.name not in JOIN_KEYS]
+)
+
 # ---------------------------------------------------------------------------
 # In-flight nested JSON schemas (never at rest). Arrays of structs are
 # accessed with element_at(col, 1) / element_at(col, -1) which matches the

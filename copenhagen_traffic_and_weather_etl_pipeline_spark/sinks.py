@@ -21,11 +21,19 @@ class NotNullViolation(ValueError):
 
 
 def _not_null_violation_cond(cols: list[str]):
-    from functools import reduce
-
+    """One ``a IS NULL OR b IS NULL OR ...`` expression: a single
+    driver->JVM call however many columns the guard covers."""
     from pyspark.sql import functions as F
 
-    return reduce(lambda a, b: a | b, (F.col(c).isNull() for c in cols))
+    quoted = ("`" + c.replace("`", "``") + "`" for c in cols)
+    return F.expr(" OR ".join(f"{c} IS NULL" for c in quoted))
+
+
+def _append(df: DataFrame, path: str, partition_by: list[str] | None, format: str) -> None:
+    writer = df.write.mode("append").format(format)
+    if partition_by:
+        writer = writer.partitionBy(*partition_by)
+    writer.save(path)
 
 
 def append_table(
@@ -93,6 +101,13 @@ def append_table(
       transactional table format (Delta/Iceberg), which this
       parquet-dir sink intentionally doesn't assume.
 
+    Probe first: both modes run the same ``LIMIT 1`` probe for a
+    violating row over the persisted batch. A clean batch — the normal
+    tick — then costs two jobs, the probe and the append. Only when the
+    probe finds a row does quarantine mode write the violating rows
+    (counted by an observation on that write, not by a second pass)
+    and filter them out of the append.
+
     Returns the quarantined-row count (0 under a passing reject), or
     None when no ``not_null`` check was requested. The batch is
     persisted for the duration of the check so the probe, the split,
@@ -100,56 +115,46 @@ def append_table(
     it a non-deterministic plan (rand/sample/re-read of a moving
     source) could pass the reject probe yet land a NULL, or
     drop/duplicate rows between the two quarantine splits. Scale note:
-    the check costs one extra pass over the batch (filter scan + write,
-    or two filtered writes for quarantine) plus the cache footprint of
-    the batch — batches here are per-tick appends, orders of magnitude
-    smaller than the table; never run it over the accumulated table
-    itself (that's ``dq_expectations``' job as a publish gate).
+    on a clean batch the probe scans the whole batch (nothing stops it
+    early), filling the cache the append then reads, so the guard costs
+    one extra scan of the batch plus its cache footprint; batches here
+    are per-tick appends, orders of magnitude smaller than the table.
+    The probe takes one job per wave of partitions it scans (Spark's
+    ``limit`` scale-up), so a one-file tick is one job. Never run the
+    guard over the accumulated table itself (that's
+    ``dq_expectations``' job as a publish gate).
     """
     _guard_not_versioned_root(path, "append_table")
-    persisted = False
+    if not not_null:
+        _append(df, path, partition_by, format)
+        return None
+    if on_violation not in ("reject", "quarantine"):
+        raise ValueError(f"on_violation must be reject|quarantine, got {on_violation!r}")
+    missing = [c for c in not_null if c not in df.columns]
+    if missing:
+        raise ValueError(f"not_null columns absent from batch: {missing}")
+    from pyspark.sql import functions as F
+
+    from .plans import with_run_metrics
+
+    df = df.persist()
     try:
-        if not_null:
-            if on_violation not in ("reject", "quarantine"):
-                raise ValueError(f"on_violation must be reject|quarantine, got {on_violation!r}")
-            missing = [c for c in not_null if c not in df.columns]
-            if missing:
-                raise ValueError(f"not_null columns absent from batch: {missing}")
-            df = df.persist()
-            persisted = True
-            viol = _not_null_violation_cond(not_null)
-            if on_violation == "reject":
-                sample = df.where(viol).limit(1).collect()
-                if sample:
-                    raise NotNullViolation(
-                        f"append to {path} rejected: NULL in declared NOT NULL "
-                        f"column(s) {not_null}; first violating row: {sample[0].asDict()}"
-                    )
-                quarantined = 0
-                clean = df
-                bad = None
-            else:
-                bad = df.where(viol)
-                quarantined = bad.count()
-                clean = df.where(~viol)
-        else:
-            quarantined = None
-            clean = df
-            bad = None
-        if bad is not None and quarantined:
-            qpath = quarantine_path or path.rstrip("/") + "_quarantine"
-            qwriter = bad.write.mode("append").format(format)
-            if partition_by:
-                qwriter = qwriter.partitionBy(*partition_by)
-            qwriter.save(qpath)
-        writer = clean.write.mode("append").format(format)
-        if partition_by:
-            writer = writer.partitionBy(*partition_by)
-        writer.save(path)
-        return quarantined
+        viol = _not_null_violation_cond(not_null)
+        hit = df.where(viol).limit(1).collect()
+        if not hit:
+            _append(df, path, partition_by, format)
+            return 0
+        if on_violation == "reject":
+            raise NotNullViolation(
+                f"append to {path} rejected: NULL in declared NOT NULL "
+                f"column(s) {not_null}; first violating row: {hit[0].asDict()}"
+            )
+        bad, seen = with_run_metrics(df.where(viol), rows=F.count(F.lit(1)))
+        _append(bad, quarantine_path or path.rstrip("/") + "_quarantine", partition_by, format)
+        _append(df.where(~viol), path, partition_by, format)
+        return seen.get["rows"]
     finally:
-        if persisted:
-            df.unpersist()
+        df.unpersist()
 
 
 def overwrite_table(df: DataFrame, path: str, format: str = "parquet") -> None:
@@ -344,11 +349,16 @@ def read_table_versioned(
     a single reader), because published version dirs are never
     mutated, only superseded and eventually swept (after ``keep``
     further refreshes)."""
+    return spark.read.format(format).load(live_version(path))
+
+
+def live_version(path: str) -> str:
+    """The live ``v_<n>`` dir of a version-pointer table, resolved once
+    from ``_CURRENT`` (FileNotFoundError if nothing was published)."""
     from pathlib import Path
 
     pointer = Path(path) / _CURRENT_POINTER
-    version = pointer.read_text().splitlines()[0].strip()
-    return spark.read.format(format).load(str(Path(path) / version))
+    return str(Path(path) / pointer.read_text().splitlines()[0].strip())
 
 
 def write_bucketed(

@@ -34,13 +34,19 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..functions import DATE_FMT, TIME_FMT
 from ..operators.flatten import flatten_traffic, flatten_weather, split_errors
-from ..operators.snapshot import latest_snapshot_join
-from ..schemas import FETCH_RESULT_SCHEMA, TRAFFIC_SCHEMA, WEATHER_SCHEMA
+from ..operators.snapshot import latest_snapshot_join, latest_snapshot_since
+from ..plans import with_run_metrics
+from ..schemas import (
+    FETCH_RESULT_SCHEMA,
+    SNAPSHOT_SCHEMA,
+    TRAFFIC_SCHEMA,
+    WEATHER_SCHEMA,
+)
 from ..sinks import (
     append_table,
+    live_version,
     overwrite_table,
     overwrite_table_versioned,
-    read_table_versioned,
 )
 
 
@@ -117,6 +123,20 @@ def ingest_and_refresh(
       4. rebuild ``latest_joined_data`` (S6) — *after* the appends, in
          the same foreachBatch, eliminating the reference's +5-min race.
 
+    The tick costs O(tick), not O(history). The traffic append's NOT
+    NULL probe also fills an observation of the newest (``date``,
+    ``time``) the batch holds. When every traffic row landed, that stamp
+    is in the table, and :func:`~..operators.snapshot.latest_snapshot_since`
+    publishes from it: one probe for a newer traffic row, then a join
+    of both tables filtered by the literal stamp (one date partition,
+    one tick's files), or, for a late batch, the flagship join over
+    stamps at or after it. When no traffic row landed or some were
+    quarantined, the stamp proves nothing and the full-history
+    :func:`~..operators.snapshot.latest_snapshot_join` runs. Every path
+    publishes what ``latest_snapshot_join`` over the full tables would.
+    A clean one-file tick is seven Spark jobs: probe and append per
+    table, the newer-stamp probe, and the publish's broadcast and write.
+
     The checkpoint makes the whole thing exactly-once at the source level
     (reprocessed files are deduplicated by the file-source log); the
     snapshot overwrite is idempotent by construction.
@@ -126,7 +146,7 @@ def ingest_and_refresh(
     (:func:`~..sinks.overwrite_table_versioned`) instead of a plain
     overwrite: a dashboard reader hitting the snapshot mid-refresh then
     never sees a partial or missing table (read it back with
-    :func:`~..sinks.read_table_versioned`). Default off — plain
+    :func:`latest_joined_snapshot`). Default off — plain
     overwrite is the reference's own last-writer-wins semantics
     (README.md:84) and what existing path-based readers expect.
     ``versioned_keep`` is the version retention depth: a superseded
@@ -145,13 +165,14 @@ def ingest_and_refresh(
         ok, bad = split_errors(batch_df)
         stamp_d = F.date_format("fetched_at", DATE_FMT)
         stamp_t = F.date_format("fetched_at", TIME_FMT)
-        traffic = flatten_traffic(
-            ok.filter(F.col("data_type") == "traffic"), stamp_d, stamp_t
+        # The observation rides the append's own probe: no extra job.
+        traffic, landed = with_run_metrics(
+            flatten_traffic(ok.where("data_type = 'traffic'"), stamp_d, stamp_t),
+            rows=F.count(F.lit(1)),
+            newest=F.max(F.struct("date", "time")),
         )
-        weather = flatten_weather(
-            ok.filter(F.col("data_type") == "weather"), stamp_d, stamp_t
-        )
-        append_table(
+        weather = flatten_weather(ok.where("data_type = 'weather'"), stamp_d, stamp_t)
+        quarantined = append_table(
             traffic,
             traffic_path,
             partition_by=["date"],
@@ -173,10 +194,16 @@ def ingest_and_refresh(
         # UNABLE_TO_INFER_SCHEMA on a fresh pipeline's first tick. The
         # declared schema also pins the date partition column to its
         # DDL string type instead of partition-value inference.
-        snap = latest_snapshot_join(
-            spark.read.schema(TRAFFIC_SCHEMA).parquet(traffic_path),
-            spark.read.schema(WEATHER_SCHEMA).parquet(weather_path),
-        )
+        traffic_all = spark.read.schema(TRAFFIC_SCHEMA).parquet(traffic_path)
+        weather_all = spark.read.schema(WEATHER_SCHEMA).parquet(weather_path)
+        # The append's NOT NULL probe has run over `traffic`, so `landed`
+        # is filled. Its newest stamp is in the table only if every row
+        # landed; otherwise fall back to the full-history query.
+        seen = landed.get
+        if seen["rows"] and not quarantined:
+            snap = latest_snapshot_since(traffic_all, weather_all, tuple(seen["newest"]))
+        else:
+            snap = latest_snapshot_join(traffic_all, weather_all)
         if versioned_snapshot:
             overwrite_table_versioned(snap, snapshot_path, keep=versioned_keep)
         else:
@@ -214,7 +241,7 @@ def latest_joined_snapshot(
     path = f"{base_dir}/latest_joined_data"
     if versioned:
         try:
-            return read_table_versioned(spark, path)
+            path = live_version(path)
         except FileNotFoundError as e:
             # The producer default is versioned_snapshot=False (plain
             # last-writer-wins overwrite, the reference's semantics), so
@@ -228,7 +255,8 @@ def latest_joined_snapshot(
                 "versioned_snapshot=True, or read the plain overwrite "
                 "layout with latest_joined_snapshot(..., versioned=False)."
             ) from e
-    return spark.read.parquet(path)
+    # The declared schema spares the read a footer-inference job.
+    return spark.read.schema(SNAPSHOT_SCHEMA).parquet(path)
 
 
 def join_traffic_weather_streams(

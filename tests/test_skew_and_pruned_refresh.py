@@ -1,5 +1,5 @@
 """Scale operators: salted skew join equals the plain join; the
-incremental snapshot refresh prunes to the newest date partition."""
+tick's snapshot refresh prunes statically to its stamp."""
 
 from __future__ import annotations
 
@@ -7,7 +7,8 @@ from pyspark.sql import functions as F
 
 from copenhagen_traffic_and_weather_etl_pipeline_spark.operators.skew import salted_join
 from copenhagen_traffic_and_weather_etl_pipeline_spark.operators.snapshot import (
-    refresh_snapshot_pruned,
+    latest_snapshot_join,
+    latest_snapshot_since,
 )
 from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import append_table
 
@@ -40,7 +41,13 @@ def test_salted_left_join_keeps_unmatched_rows(spark):
     assert out.filter(F.col("tag").isNotNull()).count() == 1
 
 
-def test_refresh_snapshot_pruned_reads_one_partition(spark, tmp_path):
+def _plan(df) -> str:
+    return df.sparkSession._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
+
+
+def test_latest_snapshot_since_reads_one_tick(spark, tmp_path):
     cols = ["date", "time", "geo_name", "original_coordinates"]
 
     def facts(date: str, time: str, extra: str):
@@ -52,20 +59,29 @@ def test_refresh_snapshot_pruned_reads_one_partition(spark, tmp_path):
         )
 
     tpath, wpath = str(tmp_path / "traffic"), str(tmp_path / "weather")
-    for date, time in [("2026-08-12", "09:00"), ("2026-08-13", "10:00")]:
+    ticks = [("2026-08-12", "09:00"), ("2026-08-13", "09:00"), ("2026-08-13", "10:00")]
+    for date, time in ticks:
         append_table(facts(date, time, "speed"), tpath, partition_by=["date"])
         append_table(facts(date, time, "temp"), wpath, partition_by=["date"])
+    schema = "date string, time string, geo_name string, original_coordinates string"
+    traffic = spark.read.schema(f"{schema}, speed double").parquet(tpath)
+    weather = spark.read.schema(f"{schema}, temp double").parquet(wpath)
+    full = sorted(map(tuple, latest_snapshot_join(traffic, weather, cols).collect()))
 
-    snap = refresh_snapshot_pruned(spark, tpath, wpath, keys=cols)
-    rows = snap.collect()
-    assert len(rows) == 5
-    # Partition discovery types the date directory values as DATE.
-    assert {str(r["date"]) for r in rows} == {"2026-08-13"}
-
-    # Pruning is static: the scans carry a date PartitionFilter.
-    plan = spark._jvm.PythonSQLUtils.explainString(
-        snap._jdf.queryExecution(), "formatted"
-    )
+    # The tick that appended the newest stamp: literal date AND time.
+    snap = latest_snapshot_since(traffic, weather, ticks[-1], keys=cols)
+    assert sorted(map(tuple, snap.collect())) == full
+    assert len(full) == 5 and {r[:2] for r in full} == {ticks[-1]}
+    # Pruning is static: the scans carry the date PartitionFilter, and
+    # the time literal is pushed to parquet for row-group skipping.
+    plan = _plan(snap)
     section = plan.split("PartitionFilters", 1)
     assert len(section) == 2
     assert "2026-08-13" in section[1]
+    assert "EqualTo(time,10:00)" in plan
+    assert "2026-08-12" not in plan
+
+    # A late batch (an older stamp): same answer, still pruned to >= it.
+    late = latest_snapshot_since(traffic, weather, ticks[1], keys=cols)
+    assert sorted(map(tuple, late.collect())) == full
+    assert "2026-08-12" not in _plan(late)
