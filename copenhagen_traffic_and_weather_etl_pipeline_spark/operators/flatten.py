@@ -27,7 +27,7 @@ from ..schemas import (
 )
 
 # Every expression below is a SQL string built once at import. A plan is
-# then a handful of driver->JVM calls (one per projection/filter), where
+# then a handful of Python->JVM calls (one per projection/filter), where
 # composing the same expressions from ``Column`` objects cost one py4j
 # round trip per column, alias, cast and ``&`` — thousands per tick.
 

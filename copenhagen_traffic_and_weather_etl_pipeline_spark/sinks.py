@@ -22,7 +22,7 @@ class NotNullViolation(ValueError):
 
 def _not_null_violation_cond(cols: list[str]):
     """One ``a IS NULL OR b IS NULL OR ...`` expression: a single
-    driver->JVM call however many columns the guard covers."""
+    Python->JVM call however many columns the guard covers."""
     from pyspark.sql import functions as F
 
     quoted = ("`" + c.replace("`", "``") + "`" for c in cols)
