@@ -103,7 +103,9 @@ def keep_list(clusters: DataFrame, id_col: str = "doc_id") -> DataFrame:
 #      components via resolve_clusters, keep lowest id),
 #   4. append the ACCEPTED docs' bucket rows to the index.
 #
-# Work per tick is O(batch + collisions), never O(corpus). Hashing here
+# Work per tick is O(batch + index): the corpus documents are never
+# re-read, but step 2 scans the whole band index (4 rows per accepted
+# doc), so the index, not the batch, bounds a tick. Hashing here
 # is xxhash64 — the fast native path (these operators are not oracle-
 # checked; the md5 formulations in the workload registry are, see README
 # "Scale posture" on that tradeoff).

@@ -3,9 +3,11 @@
 The reference appends one-row CSV load jobs to BigQuery
 (deployment_function.py:182-196, ``if_exists='append'``) and refreshes
 ``latest_joined_data`` with WRITE_TRUNCATE (README.md:84). Here:
-Parquet tables, append vs overwrite mode, date-partitioned for scale
+date-partitioned Parquet fact tables that only ever take appends
 (partition pruning makes the latest-snapshot query touch one partition
-instead of the whole history).
+instead of the whole history), and a snapshot that is replaced only
+through the version-pointer layout (:func:`overwrite_table_versioned`),
+so a reader never sees a partial or missing table.
 """
 
 from __future__ import annotations
@@ -124,7 +126,7 @@ def append_table(
     guard over the accumulated table itself (that's
     ``dq_expectations``' job as a publish gate).
     """
-    _guard_not_versioned_root(path, "append_table")
+    _guard_not_versioned_root(path)
     if not not_null:
         _append(df, path, partition_by, format)
         return None
@@ -157,36 +159,21 @@ def append_table(
         df.unpersist()
 
 
-def overwrite_table(df: DataFrame, path: str, format: str = "parquet") -> None:
-    """S6: WRITE_TRUNCATE-style snapshot refresh (README.md:84).
-
-    Spark's own overwrite deletes-then-writes, so a concurrent reader
-    (or a crash) can observe a partial table — the same last-writer-wins
-    semantics the reference accepts for ``latest_joined_data``
-    (README.md:84). For reader-safe, crash-atomic refreshes use the
-    version-pointer layout: :func:`overwrite_table_versioned` +
-    :func:`read_table_versioned`."""
-    _guard_not_versioned_root(path, "overwrite_table")
-    df.write.mode("overwrite").format(format).save(path)
-
-
 _CURRENT_POINTER = "_CURRENT"
 
 
-def _guard_not_versioned_root(path: str, caller: str) -> None:
-    """Refuse plain-layout writes into a version-pointer root: an
-    append would land part files beside ``v_<n>``/``_CURRENT`` (a mixed
-    layout the retention sweep never cleans and plain readers choke
-    on), and a plain overwrite would silently delete the pointer and
-    every version out from under :func:`read_table_versioned` readers.
-    The mirror image of :func:`overwrite_table_versioned`'s migration
-    guard. ``path`` may be a non-filesystem target (e.g. a BigQuery
+def _guard_not_versioned_root(path: str) -> None:
+    """Refuse appends into a version-pointer root: an append would land
+    part files beside ``v_<n>``/``_CURRENT``, a mixed layout the
+    retention sweep never cleans and path readers choke on. The mirror
+    image of :func:`overwrite_table_versioned`'s migration guard.
+    ``path`` may be a non-filesystem target (e.g. a BigQuery
     ``dataset.table``) — those never have a pointer file and pass."""
     from pathlib import Path
 
     if (Path(path) / _CURRENT_POINTER).exists():
         raise ValueError(
-            f"{caller} refused: {path} is a version-pointer table "
+            f"append_table refused: {path} is a version-pointer table "
             "(_CURRENT present). Publish through "
             "overwrite_table_versioned instead, or use a different path."
         )

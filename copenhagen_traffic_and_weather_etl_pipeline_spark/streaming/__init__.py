@@ -42,12 +42,7 @@ from ..schemas import (
     TRAFFIC_SCHEMA,
     WEATHER_SCHEMA,
 )
-from ..sinks import (
-    append_table,
-    live_version,
-    overwrite_table,
-    overwrite_table_versioned,
-)
+from ..sinks import append_table, live_version, overwrite_table_versioned
 
 
 def _not_null_cols(schema: T.StructType) -> list[str]:
@@ -63,14 +58,11 @@ FETCH_STREAM_SCHEMA = T.StructType(
 )
 
 
-def read_fetch_stream(spark: SparkSession, path: str, max_files_per_trigger: int | None = None) -> DataFrame:
+def read_fetch_stream(spark: SparkSession, path: str) -> DataFrame:
     """S1/S8 streaming source: each ingestion tick drops one JSON file of
     fetch results into ``path``; the stream discovers and processes them
     in arrival order (Trigger.AvailableNow drains the backlog)."""
-    reader = spark.readStream.schema(FETCH_STREAM_SCHEMA)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", str(max_files_per_trigger))
-    return reader.json(path)
+    return spark.readStream.schema(FETCH_STREAM_SCHEMA).json(path)
 
 
 def hourly_window_counts(
@@ -105,7 +97,7 @@ def ingest_and_refresh(
     checkpoint_dir: str,
     available_now: bool = True,
     processing_time: str | None = None,
-    versioned_snapshot: bool = False,
+    versioned_snapshot: bool = True,
     versioned_keep: int = 1,
 ) -> StreamingQuery:
     """The full pipeline as one coordinated streaming job.
@@ -120,7 +112,7 @@ def ingest_and_refresh(
          violating rows are QUARANTINED (``<table>_quarantine``) so one
          bad upstream record dead-letters instead of killing the
          stream, and the clean rows still land,
-      4. rebuild ``latest_joined_data`` (S6) — *after* the appends, in
+      4. publish ``latest_joined_data`` (S6) — *after* the appends, in
          the same foreachBatch, eliminating the reference's +5-min race.
 
     The tick costs O(tick), not O(history). The traffic append's NOT
@@ -139,16 +131,18 @@ def ingest_and_refresh(
 
     The checkpoint makes the whole thing exactly-once at the source level
     (reprocessed files are deduplicated by the file-source log); the
-    snapshot overwrite is idempotent by construction.
+    snapshot publish is idempotent by construction.
 
-    ``versioned_snapshot=True`` publishes ``latest_joined_data``
-    through the version-pointer layout
-    (:func:`~..sinks.overwrite_table_versioned`) instead of a plain
-    overwrite: a dashboard reader hitting the snapshot mid-refresh then
-    never sees a partial or missing table (read it back with
-    :func:`latest_joined_snapshot`). Default off — plain
-    overwrite is the reference's own last-writer-wins semantics
-    (README.md:84) and what existing path-based readers expect.
+    The snapshot is published through the version-pointer layout
+    (:func:`~..sinks.overwrite_table_versioned`): a dashboard reader
+    hitting it mid-refresh never sees a partial or missing table (read
+    it back with :func:`latest_joined_snapshot`). A plain-layout
+    ``latest_joined_data`` left by an older deployment is refused by
+    that function's migration guard on the first publish; move it
+    aside or clear it first. ``versioned_snapshot`` stays only because
+    the benchmark's hourly workload (``perfbench/workloads.py``) passes
+    ``versioned_snapshot=True``; ``False`` (the removed plain-overwrite
+    layout) raises ``ValueError``.
     ``versioned_keep`` is the version retention depth: a superseded
     version survives that many further refreshes before it is swept,
     so size it to the longest reader scan measured in refresh
@@ -156,6 +150,12 @@ def ingest_and_refresh(
     dashboard whose scans span several ticks needs more than the
     default 1.
     """
+    if not versioned_snapshot:
+        raise ValueError(
+            "versioned_snapshot=False (the plain-overwrite snapshot layout) "
+            "was removed: latest_joined_data is always published through "
+            "the version pointer"
+        )
     spark = stream_df.sparkSession
     traffic_path = f"{base_dir}/traffic_table"
     weather_path = f"{base_dir}/weather_table"
@@ -204,10 +204,7 @@ def ingest_and_refresh(
             snap = latest_snapshot_since(traffic_all, weather_all, tuple(seen["newest"]))
         else:
             snap = latest_snapshot_join(traffic_all, weather_all)
-        if versioned_snapshot:
-            overwrite_table_versioned(snap, snapshot_path, keep=versioned_keep)
-        else:
-            overwrite_table(snap, snapshot_path)
+        overwrite_table_versioned(snap, snapshot_path, keep=versioned_keep)
 
     writer = (
         stream_df.writeStream.foreachBatch(process_batch)
@@ -222,39 +219,19 @@ def ingest_and_refresh(
     return writer.start()
 
 
-def latest_joined_snapshot(
-    spark: SparkSession, base_dir: str, versioned: bool = True
-) -> DataFrame:
+def latest_joined_snapshot(spark: SparkSession, base_dir: str) -> DataFrame:
     """Consumer-side resolver for the snapshot :func:`ingest_and_refresh`
-    maintains: returns ``latest_joined_data`` as a DataFrame, pinned.
+    publishes: returns ``latest_joined_data`` as a DataFrame, pinned.
 
-    With ``versioned=True`` (the ``versioned_snapshot=True`` producer),
-    the version pointer is resolved ONCE here — the returned DataFrame
+    The version pointer is resolved ONCE here — the returned DataFrame
     reads one immutable ``v_<n>`` dir, so refresh ticks committing and
     compaction sweeping underneath it are invisible until the caller
     re-resolves: a dashboard holds one consistent snapshot for as long
     as its scan runs, provided the producer's ``versioned_keep`` covers
     the scan length in ticks (pinned-across-two-ticks is proved
-    end-to-end in tests/test_streaming.py). With ``versioned=False``
-    it is a plain path read of the last-writer-wins layout, which can
-    observe a mid-refresh overwrite — the reference's own semantics."""
-    path = f"{base_dir}/latest_joined_data"
-    if versioned:
-        try:
-            path = live_version(path)
-        except FileNotFoundError as e:
-            # The producer default is versioned_snapshot=False (plain
-            # last-writer-wins overwrite, the reference's semantics), so
-            # a default-on-default pairing lands here: explain the
-            # mismatch instead of surfacing a bare _CURRENT miss.
-            raise FileNotFoundError(
-                f"no version pointer at {path}: the producer "
-                "(ingest_and_refresh) was started without "
-                "versioned_snapshot=True, or has not published its first "
-                "snapshot yet. Either start the producer with "
-                "versioned_snapshot=True, or read the plain overwrite "
-                "layout with latest_joined_snapshot(..., versioned=False)."
-            ) from e
+    end-to-end in tests/test_streaming.py). ``FileNotFoundError`` means
+    nothing has been published yet."""
+    path = live_version(f"{base_dir}/latest_joined_data")
     # The declared schema spares the read a footer-inference job.
     return spark.read.schema(SNAPSHOT_SCHEMA).parquet(path)
 

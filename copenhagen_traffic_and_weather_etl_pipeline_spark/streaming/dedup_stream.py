@@ -6,9 +6,9 @@ replacement for deployment_function.py's cron loop).
 Each micro-batch of new documents is deduplicated against the PERSISTENT
 band-bucket index (parquet on disk, so it survives query restarts and is
 shared across jobs), then the accepted documents and their index rows are
-appended. Per-tick work is O(batch + collisions) — the corpus itself is
-never re-scanned, which is the property that matters when the corpus is
-100 TB and the tick is hourly.
+appended. Per-tick work is O(batch + index) — the corpus documents are
+never re-scanned, but the batch-vs-index semi-join scans the whole band
+index (4 rows per accepted doc) every tick.
 """
 
 from __future__ import annotations

@@ -368,7 +368,7 @@ def dedup_resolve_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# Dedup 3c: INCREMENTAL MinHash-LSH — the O(batch)-per-tick path
+# Dedup 3c: INCREMENTAL MinHash-LSH — the O(batch + index)-per-tick path
 # (operators/dedup.py incremental_dedup). Fixture: even doc_ids are the
 # already-ingested corpus (their band buckets are the persistent index),
 # odd doc_ids arrive as the new batch. A batch doc is rejected if it
@@ -444,7 +444,8 @@ SELECT node AS doc_id FROM reach GROUP BY node HAVING node = min(root)
     doc="incremental MinHash-LSH dedup (operators/dedup.py "
     "incremental_dedup): new batch (odd doc_ids) vs the persistent "
     "band-bucket index of the corpus (even doc_ids), then batch-vs-batch "
-    "CC resolution — O(batch + collisions) per tick, never O(corpus)",
+    "CC resolution — O(batch + index) per tick: the corpus documents are "
+    "never re-read, the band index is scanned once",
     tags=["dedup", "minhash", "incremental"],
 )
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -526,8 +527,8 @@ SELECT 2 AS tick, doc_id FROM acc2
     "path (streaming/dedup_stream.py): tick-1 batch dedups against the "
     "corpus index, its ACCEPTED docs' bucket rows append to the index, "
     "tick-2 dedups against the grown index — the persistent band-bucket "
-    "index semantics that keep per-tick work O(batch + collisions) at "
-    "100 TB. Oracle replays both ticks (two recursive-CTE resolutions)",
+    "index semantics that keep per-tick work O(batch + index). Oracle "
+    "replays both ticks (two recursive-CTE resolutions)",
     tags=["dedup", "minhash", "incremental", "streaming"],
 )
 def dedup_incremental_replay(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,7 +26,8 @@ from copenhagen_traffic_and_weather_etl_pipeline_spark.schemas import (
 )
 from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
     append_table,
-    overwrite_table,
+    overwrite_table_versioned,
+    read_table_versioned,
 )
 from copenhagen_traffic_and_weather_etl_pipeline_spark.sources import fixtures
 from copenhagen_traffic_and_weather_etl_pipeline_spark.sources.rest import (
@@ -81,11 +82,11 @@ def test_end_to_end_two_ticks(spark, tmp_path):
     assert snap.exceptAll(snap2).count() == 0
     assert snap2.exceptAll(snap).count() == 0
 
-    # Snapshot overwrite (S6) — second write replaces, not appends.
+    # Snapshot publish (S6) — second publish replaces, not appends.
     spath = str(tmp_path / "latest_joined_data")
-    overwrite_table(snap, spath)
-    overwrite_table(snap, spath)
-    assert spark.read.parquet(spath).count() == 20
+    overwrite_table_versioned(snap, spath)
+    overwrite_table_versioned(snap, spath)
+    assert read_table_versioned(spark, spath).count() == 20
 
     # Kelvin->Celsius landed: fixture 290.15K == 17.0C
     temp = wdf.select("temperature").first()["temperature"]

@@ -197,7 +197,8 @@ def test_sinks_roundtrip_orc_and_parquet(spark, tmp_path):
     # The sinks take any Spark-built-in format; ORC must round-trip with
     # identical content and honor partition pruning like parquet does.
     from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
-        overwrite_table,
+        overwrite_table_versioned,
+        read_table_versioned,
     )
 
     df = spark.range(100).select(
@@ -217,8 +218,8 @@ def test_sinks_roundtrip_orc_and_parquet(spark, tmp_path):
         plan = one._jdf.queryExecution().executedPlan().toString()
         assert "PartitionFilters" in plan or "part#" in plan
         s = str(tmp_path / f"s_{fmt}")
-        overwrite_table(df.limit(10), s, format=fmt)
-        assert spark.read.format(fmt).load(s).count() == 10
+        overwrite_table_versioned(df.limit(10), s, format=fmt)
+        assert read_table_versioned(spark, s, format=fmt).count() == 10
 
 
 def test_materialize_once_local_and_reliable_paths(spark, tmp_path):

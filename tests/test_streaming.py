@@ -13,6 +13,7 @@ from copenhagen_traffic_and_weather_etl_pipeline_spark.schemas import GEO_POINTS
 from copenhagen_traffic_and_weather_etl_pipeline_spark.streaming import (
     hourly_window_counts,
     ingest_and_refresh,
+    latest_joined_snapshot,
     read_fetch_stream,
 )
 
@@ -48,6 +49,8 @@ def _write_tick(input_dir, name: str, fetched_at: str) -> None:
 
 
 def test_streaming_ingest_and_refresh_two_ticks(spark, tmp_path):
+    """The producer and the reader, both with their defaults, publish
+    and read the same snapshot layout."""
     input_dir = tmp_path / "incoming"
     input_dir.mkdir()
     base = tmp_path / "tables"
@@ -59,7 +62,7 @@ def test_streaming_ingest_and_refresh_two_ticks(spark, tmp_path):
     q = ingest_and_refresh(stream, str(base), str(ckpt))
     q.awaitTermination(120)
 
-    snap1 = spark.read.parquet(str(base / "latest_joined_data"))
+    snap1 = latest_joined_snapshot(spark, str(base))
     assert snap1.count() == 20
     assert {r["time"] for r in snap1.select("time").distinct().collect()} == {"09:00"}
 
@@ -72,17 +75,17 @@ def test_streaming_ingest_and_refresh_two_ticks(spark, tmp_path):
     traffic = spark.read.parquet(str(base / "traffic_table"))
     assert traffic.count() == 40  # both ticks appended (20 each)
 
-    snap2 = spark.read.parquet(str(base / "latest_joined_data"))
-    assert snap2.count() == 20  # overwritten, not appended
+    snap2 = latest_joined_snapshot(spark, str(base))
+    assert snap2.count() == 20  # replaced, not appended
     assert {r["time"] for r in snap2.select("time").distinct().collect()} == {"10:00"}
 
 
 def test_streaming_versioned_snapshot_refresh(spark, tmp_path):
-    """``versioned_snapshot=True``: the snapshot publishes through the
-    version-pointer layout — two ticks produce two refreshes, readers
-    resolve the pointer to the newest, the previous version survives
-    for in-flight scans, and a reader pinned before the second refresh
-    still reads the first snapshot."""
+    """The snapshot publishes through the version-pointer layout — two
+    ticks produce two refreshes, readers resolve the pointer to the
+    newest, the previous version survives for in-flight scans, and a
+    reader pinned before the second refresh still reads the first
+    snapshot."""
     from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
         read_table_versioned,
     )
@@ -97,7 +100,6 @@ def test_streaming_versioned_snapshot_refresh(spark, tmp_path):
         read_fetch_stream(spark, str(input_dir)),
         str(base),
         str(ckpt),
-        versioned_snapshot=True,
     )
     q.awaitTermination(120)
 
@@ -113,7 +115,6 @@ def test_streaming_versioned_snapshot_refresh(spark, tmp_path):
         read_fetch_stream(spark, str(input_dir)),
         str(base),
         str(ckpt),
-        versioned_snapshot=True,
     )
     q2.awaitTermination(120)
 
@@ -134,7 +135,6 @@ def test_streaming_versioned_snapshot_refresh(spark, tmp_path):
         read_fetch_stream(spark, str(input_dir)),
         str(base),
         str(ckpt),
-        versioned_snapshot=True,
         versioned_keep=2,
     )
     q3.awaitTermination(120)
@@ -157,10 +157,6 @@ def test_snapshot_consumer_pinned_across_two_ticks_while_compaction_runs(
     v_0, which fell off the retention history)."""
     from pathlib import Path
 
-    from copenhagen_traffic_and_weather_etl_pipeline_spark.streaming import (
-        latest_joined_snapshot,
-    )
-
     input_dir = tmp_path / "incoming"
     input_dir.mkdir()
     base = tmp_path / "tables"
@@ -172,7 +168,6 @@ def test_snapshot_consumer_pinned_across_two_ticks_while_compaction_runs(
             read_fetch_stream(spark, str(input_dir)),
             str(base),
             str(ckpt),
-            versioned_snapshot=True,
             versioned_keep=2,
         )
         q.awaitTermination(120)
@@ -199,8 +194,7 @@ def test_snapshot_consumer_pinned_across_two_ticks_while_compaction_runs(
     # refreshes and the sweep.
     assert sorted(map(tuple, pinned.collect())) == baseline
 
-    # A fresh resolve sees the newest tick; the unversioned consumer
-    # path still reads the plain layout semantics elsewhere.
+    # A fresh resolve sees the newest tick.
     fresh = latest_joined_snapshot(spark, str(base))
     assert {r["time"] for r in fresh.select("time").distinct().collect()} == {"12:00"}
 
@@ -236,7 +230,7 @@ def test_streaming_not_null_guard_quarantines_bad_metadata(spark, tmp_path):
     assert spark.read.parquet(str(base / "weather_table")).count() == 20
     assert not (base / "weather_table_quarantine").exists()
     # And the snapshot refresh still ran on the clean rows.
-    assert spark.read.parquet(str(base / "latest_joined_data")).count() == 19
+    assert latest_joined_snapshot(spark, str(base)).count() == 19
 
 
 def test_streaming_first_tick_with_one_api_fully_down(spark, tmp_path):
@@ -264,14 +258,14 @@ def test_streaming_first_tick_with_one_api_fully_down(spark, tmp_path):
     q.awaitTermination(120)
 
     assert spark.read.parquet(str(base / "weather_table")).count() == 20
-    assert spark.read.parquet(str(base / "latest_joined_data")).count() == 0
+    assert latest_joined_snapshot(spark, str(base)).count() == 0
 
     # Next tick: both APIs healthy — the pipeline recovers.
     _write_tick(input_dir, "tick2.json", "2026-08-12T10:00:00.000Z")
     q2 = ingest_and_refresh(read_fetch_stream(spark, str(input_dir)), str(base), str(ckpt))
     q2.awaitTermination(120)
 
-    snap = spark.read.parquet(str(base / "latest_joined_data"))
+    snap = latest_joined_snapshot(spark, str(base))
     assert snap.count() == 20
     assert {r["time"] for r in snap.select("time").distinct().collect()} == {"10:00"}
 
@@ -409,3 +403,13 @@ def test_stream_static_broadcast_enrichment(spark, tmp_path):
     ).collect()
     assert len(rows) == 20
     assert all(r["geo_name"] == r["dim_name"] for r in rows)
+
+
+def test_plain_snapshot_layout_is_refused():
+    """The plain-overwrite snapshot layout is gone: asking for it fails
+    before any stream starts instead of silently publishing the
+    version-pointer layout."""
+    import pytest
+
+    with pytest.raises(ValueError, match="plain-overwrite"):
+        ingest_and_refresh(None, "tables", "ckpt", versioned_snapshot=False)

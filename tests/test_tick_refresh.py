@@ -73,7 +73,6 @@ class _Pipeline:
             read_fetch_stream(self.spark, str(self.input)),
             str(self.base),
             str(self.ckpt),
-            versioned_snapshot=True,
         )
         # A blocked Observation would hang the batch past the timeout.
         assert q.awaitTermination(120)

@@ -154,15 +154,12 @@ def test_retention_depth_keeps_n_published_predecessors(tmp_path):
 
 def test_plain_writes_into_versioned_root_are_refused(tmp_path):
     """The mirror guard: append_table would land part files beside
-    v_<n>/_CURRENT (mixed layout), and plain overwrite_table would
-    delete the pointer out from under readers — both must refuse."""
+    v_<n>/_CURRENT (mixed layout), so it must refuse."""
     path = str(tmp_path / "vtable")
     sinks.overwrite_table_versioned(_FakeDF("gen-0"), path)
 
     with pytest.raises(ValueError, match="version-pointer table"):
         sinks.append_table(_FakeDF("batch"), path)
-    with pytest.raises(ValueError, match="version-pointer table"):
-        sinks.overwrite_table(_FakeDF("snap"), path)
     # The table is untouched and still readable.
     assert _read_published(path) == "gen-0"
 

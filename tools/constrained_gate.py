@@ -21,34 +21,19 @@ Protocol:
   ``SPARK_GRAFT_DRIVER_MEM=<mem>`` (default 4g) — the heap cap must be
   set before the JVM launches, and a fresh JVM also keeps the
   measurement free of session-tail allocator state;
-- two modes, chosen by what the RESULT SIZE allows:
-  - ``--mode oracle`` (default): ``tools/check_correctness.py`` —
-    full Spark-vs-DuckDB value compare. Valid only where the result
-    set is small enough to collect on BOTH engines: gated SFs
-    (<= 0.1), where every registry output is aggregate-sized.
-  - ``--mode completion``: the scaling sweep's fresh-JVM worker —
-    best-of-2 full materialization through the noop sink (streams and
-    discards; nothing collects). REQUIRED at sf1 for the
-    embedding-pair family: on replica data their ANSWER is itself
-    ~500M pair rows (~16 GB) — an oracle compare would have to
-    collect that to pandas AND produce it in DuckDB, so oracle mode
-    OOMs by construction, not by engine defect (measured on this
-    tool's first sf1 outing: the failing allocation was Spark's
-    collect serializer, ArrowConverters$ArrowBatchIterator). This is
-    the r13 sf1 protocol, now spelled out in the tool.
-- default query set: the top-10-by-sf0.1-cost rows of the scaling
-  sweep plus ALL THREE embedding-pair queries (the family with the
-  quadratic candidate space — the one place per-task bounds are
+- the fork runs ``tools/check_correctness.py``: a full Spark-vs-DuckDB
+  value compare of every chosen query;
+- default query set: the ten costliest queries at sf0.1 plus ALL
+  THREE embedding-pair queries (the family with the quadratic
+  candidate space — the one place per-task bounds are
   load-bearing rather than incidental);
 - default SF 0.1 (the bench SF: data comfortably exceeds what a 4 GiB
   heap could hold resident, so completion means streaming/bounded
   working sets, not luck); CI runs the sf0.01 oracle variant on every
-  pytest run (tests/test_constrained_gate.py), and per-round
-  maintenance should run sf0.1 oracle plus sf1 completion.
+  pytest run (tests/test_constrained_gate.py).
 
 Usage:
     python tools/constrained_gate.py                  # default set, sf0.1, 4g
-    python tools/constrained_gate.py --sf 1 --mode completion
     python tools/constrained_gate.py --full           # all 175 entries
     python tools/constrained_gate.py q1 q2 --mem 3g   # explicit set
 """
@@ -64,9 +49,10 @@ from pathlib import Path
 REPO = Path(__file__).resolve().parent.parent
 sys.path.insert(0, str(REPO))
 
-# Top-10 by sf0.1 wall time in SCALING_SWEEP.md, plus the two
-# embedding-pair queries not already in that top-10. Revisit when the
-# sweep's cost ordering shifts materially.
+# Top-10 by sf0.1 wall time in the per-query scaling sweep (its report
+# is kept in commit 81b5af4), plus the two embedding-pair queries not
+# already in that top-10. Revisit when the cost ordering shifts
+# materially.
 GATE_QUERIES = [
     "stream_join_replay",
     "triangle_count_coorder",
@@ -88,34 +74,17 @@ def run_gate(
     sf: str = "0.1",
     mem: str = "4g",
     full: bool = False,
-    mode: str = "oracle",
 ) -> int:
-    """Fork the chosen checker under a constrained heap; return its rc."""
+    """Fork the oracle checker under a constrained heap; return its rc."""
     qlist = queries if queries else GATE_QUERIES
-    if mode == "completion":
-        if full:
-            from copenhagen_traffic_and_weather_etl_pipeline_spark.workload import (  # noqa: E501
-                REGISTRY,
-            )
-
-            qlist = list(REGISTRY)
-        cmd = [
-            sys.executable,
-            str(REPO / "tools" / "scaling_sweep.py"),
-            "--worker-sf",
-            sf,
-            "--worker-queries",
-            ",".join(qlist),
-        ]
-    else:
-        cmd = [sys.executable, str(REPO / "tools" / "check_correctness.py")]
-        if not full:
-            cmd += qlist
-        cmd += ["--sf", sf]
+    cmd = [sys.executable, str(REPO / "tools" / "check_correctness.py")]
+    if not full:
+        cmd += qlist
+    cmd += ["--sf", sf]
     env = os.environ.copy()
     env["SPARK_GRAFT_DRIVER_MEM"] = mem
     print(
-        f"[constrained_gate] heap={mem} sf={sf} mode={mode} "
+        f"[constrained_gate] heap={mem} sf={sf} "
         f"queries={'ALL' if full else len(qlist)}",
         flush=True,
     )
@@ -130,22 +99,8 @@ def main() -> int:
     ap.add_argument(
         "--full", action="store_true", help="run the entire registry instead"
     )
-    ap.add_argument(
-        "--mode",
-        choices=["oracle", "completion"],
-        default="oracle",
-        help="oracle = DuckDB value compare (small-result SFs); "
-        "completion = noop-sink materialization (required at sf1 for "
-        "output-quadratic queries — see module docstring)",
-    )
     args = ap.parse_args()
-    return run_gate(
-        args.queries or None,
-        sf=args.sf,
-        mem=args.mem,
-        full=args.full,
-        mode=args.mode,
-    )
+    return run_gate(args.queries or None, sf=args.sf, mem=args.mem, full=args.full)
 
 
 if __name__ == "__main__":
