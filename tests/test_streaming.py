@@ -8,6 +8,8 @@ from __future__ import annotations
 
 import json
 
+import pytest
+
 from copenhagen_traffic_and_weather_etl_pipeline_spark.sources import fixtures
 from copenhagen_traffic_and_weather_etl_pipeline_spark.schemas import GEO_POINTS
 from copenhagen_traffic_and_weather_etl_pipeline_spark.streaming import (
@@ -406,10 +408,8 @@ def test_stream_static_broadcast_enrichment(spark, tmp_path):
 
 
 def test_plain_snapshot_layout_is_refused():
-    """The plain-overwrite snapshot layout is gone: asking for it fails
-    before any stream starts instead of silently publishing the
-    version-pointer layout."""
-    import pytest
-
+    """``versioned_snapshot=False`` asks for a snapshot layout the
+    package no longer writes: it fails before any stream starts instead
+    of silently publishing the version-pointer layout."""
     with pytest.raises(ValueError, match="plain-overwrite"):
         ingest_and_refresh(None, "tables", "ckpt", versioned_snapshot=False)
