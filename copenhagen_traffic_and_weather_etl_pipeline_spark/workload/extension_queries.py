@@ -445,7 +445,8 @@ SELECT node AS doc_id FROM reach GROUP BY node HAVING node = min(root)
     "incremental_dedup): new batch (odd doc_ids) vs the persistent "
     "band-bucket index of the corpus (even doc_ids), then batch-vs-batch "
     "CC resolution — O(batch + index) per tick: the corpus documents are "
-    "never re-read, the band index is scanned once",
+    "never re-read, the band index is scanned once (the survivors are "
+    "materialized once; job count pinned in tests/test_incremental_dedup.py)",
     tags=["dedup", "minhash", "incremental"],
 )
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -7,7 +7,6 @@ from __future__ import annotations
 
 import json
 import uuid
-from contextlib import contextmanager
 from pathlib import Path
 
 from copenhagen_traffic_and_weather_etl_pipeline_spark.operators.snapshot import (
@@ -144,42 +143,22 @@ def test_tick_whose_newest_traffic_rows_are_quarantined(spark, tmp_path):
     assert p.snapshot_stamps() == {("2026-08-12", "12:00")}
 
 
-@contextmanager
-def _jobs(spark):
-    """Collects the ids of the Spark jobs this thread runs in the block."""
-    sc = spark.sparkContext
-    group = f"jobs-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    ids: list[int] = []
-    try:
-        yield ids
-    finally:
-        sc._jsc.clearJobGroup()
-        ids.extend(_group_jobs(spark, group))
-
-
-def _group_jobs(spark, group: str) -> list[int]:
-    # Job starts reach the status store through the listener bus.
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
-
-
-def test_tick_runs_at_most_eight_jobs(spark, tmp_path):
+def test_tick_runs_at_most_eight_jobs(spark, spark_jobs, tmp_path):
     """Streaming runs the foreachBatch callback's jobs in the query's
     run-id job group: probe + append per table, the newer-stamp probe,
     and the publish's broadcast and write."""
     p = _Pipeline(spark, tmp_path)
     for hour in ("09", "10"):
         q = p.tick(f"2026-08-12T{hour}:00:00.000Z")
-        assert len(_group_jobs(spark, str(q.runId))) <= 8
+        assert len(spark_jobs.in_group(str(q.runId))) <= 8
 
 
-def test_clean_quarantine_append_runs_two_jobs(spark, tmp_path):
+def test_clean_quarantine_append_runs_two_jobs(spark, spark_jobs, tmp_path):
     path = str(tmp_path / "facts")
     batch = spark.createDataFrame(
         [("2026-08-14", 1.0), ("2026-08-14", 2.0)], "date string, v double"
     ).coalesce(1)
-    with _jobs(spark) as ids:
+    with spark_jobs() as ids:
         n = append_table(batch, path, not_null=["date", "v"], on_violation="quarantine")
     assert n == 0
     assert len(ids) == 2  # the NOT NULL probe and the append

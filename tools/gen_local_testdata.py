@@ -12,8 +12,9 @@ Schema contract (recovered sources of truth):
   - lineitem / part / supplier: DuckDB DESCRIBE of the driver files
     (round-6 session transcript) — exact column names and types.
   - events: FIXTURES.md §3 + workload/__init__.py `load()` docstring
-    (ts shipped as parquet INT64 TIMESTAMP(NANOS) in the latest
-    vintage; we replicate that vintage to exercise the normalizer).
+    (ts written as parquet INT64 TIMESTAMP(NANOS), the vintage the
+    driver's tables no longer ship (they hold TIMESTAMP(MICROS)); kept
+    so the replica and perfbench's tables exercise the normalizer).
   - documents / embeddings: FIXTURES.md §3 (doc_id,text,lang,source,
     n_chars; vec_id,embedding array<float>,label int); embedding dim 64
     per breadth_queries._PQ_M × _PQ_SUBDIM; vec_id starts at 0.
@@ -244,8 +245,8 @@ def gen_events(rng, n, out):
         props[7] = props[8] = None
     write(pa.table({
         "event_id": pa.array(np.arange(1, n + 1), pa.int64()),
-        # latest driver vintage: INT64 TIMESTAMP(NANOS) — exercises the
-        # nanosAsLong normalizer in workload.load()
+        # INT64 TIMESTAMP(NANOS) vintage — exercises the nanosAsLong
+        # normalizer in workload.load()
         "ts": pa.array(ts_us * 1000, pa.timestamp("ns")),
         "user_id": pa.array(rng.integers(1, n_users + 1, n), pa.int64()),
         "event_type": types.tolist(),
