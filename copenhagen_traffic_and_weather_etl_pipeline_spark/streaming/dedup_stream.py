@@ -9,28 +9,30 @@ shared across jobs), then the accepted documents and their index rows are
 appended. Per-tick work is O(batch + index) — the corpus documents are
 never re-scanned, but the batch-vs-index semi-join scans the whole band
 index (4 rows per accepted doc) every tick.
+
+The index rows are ``operators.dedup.band_buckets``' md5 band keys, the
+package's only hash path, which the ``dedup_incremental`` and
+``dedup_incremental_replay`` registry entries check against DuckDB.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 from pyspark.sql.utils import AnalysisException
 
 from ..operators.dedup import incremental_dedup
 
-_INDEX_SCHEMA_NATIVE = "doc_id long, band_idx int, band_key long"
-_INDEX_SCHEMA_PORTABLE = "doc_id long, band_idx int, band_key string"
+_INDEX_SCHEMA = "doc_id long, band_idx int, band_key string"
 
 
-def _read_index(spark: SparkSession, index_path: str, portable: bool) -> DataFrame:
-    """The persistent band-bucket index; empty-with-schema before the
-    first batch ever commits (bootstrap)."""
+def _read_index(spark: SparkSession, index_path: str) -> DataFrame:
+    """The persistent band-bucket index, read with its declared schema
+    (no footer-inference job); empty before the first batch ever
+    commits (bootstrap)."""
     try:
-        return spark.read.parquet(index_path)
+        return spark.read.schema(_INDEX_SCHEMA).parquet(index_path)
     except AnalysisException:
-        schema = _INDEX_SCHEMA_PORTABLE if portable else _INDEX_SCHEMA_NATIVE
-        return spark.createDataFrame([], schema)
+        return spark.createDataFrame([], _INDEX_SCHEMA)
 
 
 def dedup_ingest_stream(
@@ -38,7 +40,6 @@ def dedup_ingest_stream(
     index_path: str,
     accepted_path: str,
     checkpoint: str,
-    portable: bool = False,
 ):
     """foreachBatch writer: dedup each micro-batch against the index and
     itself, append survivors to ``accepted_path`` and their bucket rows
@@ -58,10 +59,8 @@ def dedup_ingest_stream(
         spark = batch_df.sparkSession
         batch_df.persist()
         try:
-            index = _read_index(spark, index_path, portable)
-            accepted, new_index_rows = incremental_dedup(
-                index, batch_df, portable=portable
-            )
+            index = _read_index(spark, index_path)
+            accepted, new_index_rows = incremental_dedup(index, batch_df)
             # Materialize the decision once; both writes reuse it.
             new_index_rows = new_index_rows.localCheckpoint(eager=True)
             accepted.write.mode("append").parquet(accepted_path)
@@ -85,7 +84,6 @@ def run_dedup_tick(
     index_path: str,
     accepted_path: str,
     checkpoint: str,
-    portable: bool = False,
 ) -> None:
     """One availableNow tick over a document drop directory — the batch
     twin of the hourly trigger (new parquet files land, get deduped,
@@ -94,7 +92,7 @@ def run_dedup_tick(
         spark.readStream.schema("doc_id long, text string")
         .parquet(docs_dir)
     )
-    q = dedup_ingest_stream(stream, index_path, accepted_path, checkpoint, portable)
+    q = dedup_ingest_stream(stream, index_path, accepted_path, checkpoint)
     q.awaitTermination()
 
 

@@ -1344,7 +1344,7 @@ CROSS JOIN nd
 )
 def pmi_token_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..plans import materialize_once
-    from .extension_queries import _words_col
+    from ..operators.dedup import _words_col
 
     d = load(spark, sf_dir, "documents")
     # Round-16 restructure (guide §2.4; same trajectory as the triangle

@@ -5,7 +5,7 @@ oracle where the semantics are SQL-expressible.
 
 Cross-engine determinism notes:
 - All hashing is md5 over UTF-8 text (identical hex in Spark and DuckDB);
-  min() over hex strings is a valid MinHash and is collation-safe.
+  MinHash reads its integers from the hex digits (operators/dedup.py).
 - All floating-point pipelines cast to double FIRST, accumulate in index
   order, and round BEFORE threshold filters so last-ULP drift can't flip
   a comparison.
@@ -19,53 +19,30 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..operators.dedup import (
+    _MH_PRIME,
+    _N_BANDS,
+    _N_HASHES,
+    _PERMS,
+    _ROWS_PER_BAND,
+    _words_col,
+    band_buckets,
+    band_pairs,
+    minhash_signature,
+    shingles,
+)
 from . import load, register
 
 # ---------------------------------------------------------------------------
-# Shared text primitives.
+# Shared text primitives: the DuckDB twins of operators.dedup's word split
+# (_words_col) and 3-gram shingler (shingles).
 # ---------------------------------------------------------------------------
-
-
-def _words_col():
-    """Normalized word array: trim, collapse whitespace, split."""
-    return F.split(F.regexp_replace(F.trim(F.col("text")), r"\s+", " "), " ")
-
 
 _DUCK_WORDS_CTE = (
     "words AS (SELECT doc_id, "
     "string_split(regexp_replace(trim(text), '\\s+', ' ', 'g'), ' ') AS w "
     "FROM documents)"
 )
-
-
-def shingles(docs: DataFrame, n: int = 3) -> DataFrame:
-    """Distinct word n-gram shingles per doc (doc_id, sh).
-
-    Scale: this is the shuffle-friendly representation for MinHash and
-    shingle-join dedup — narrow explode, no UDFs; at 100 TB the explode
-    output is what gets hashed/banded, never materialized wide.
-    """
-    from ..plans import fan_out_small_scan
-
-    w = _words_col()
-    idx = F.sequence(F.lit(0), F.size("w") - n)
-    grams = F.transform(
-        idx,
-        lambda i: F.concat_ws(
-            " ", *[F.element_at(F.col("w"), (i + k + 1).cast("int")) for k in range(n)]
-        ),
-    )
-    return (
-        # fan_out_small_scan: the regex+n-gram explode is the CPU hot
-        # spot of every shingle-rooted query; spread an under-partitioned
-        # scan across all cores (identity at real scale).
-        fan_out_small_scan(docs.select("doc_id", "text"))
-        .select("doc_id", w.alias("w"))
-        .filter(F.size("w") >= n)
-        .select("doc_id", F.explode(F.array_distinct(grams)).alias("sh"))
-    )
-
-
 _DUCK_SHINGLES_CTE = (
     "sh AS (SELECT DISTINCT doc_id, concat_ws(' ', w[i], w[i+1], w[i+2]) AS sh "
     "FROM words, UNNEST(range(1, len(w)-1)) AS t(i) WHERE len(w) >= 3)"
@@ -205,46 +182,25 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # Dedup 3: MinHash + LSH banding (the scale path: candidate pairs come from
-# band-bucket joins, never an all-pairs comparison).
-# MinHash = min over shingles of 16 universal-hash permutations
-# (a_i*h + b_i mod p, p = 2^31-1) of ONE md5 per shingle — hashing cost
-# is 1 md5 + 16 integer ops per shingle instead of 16 md5s (measured ~2x
-# on the whole query at sf0.1). h is the first 15 md5 hex chars as a
-# 60-bit int, reduced mod p; products stay < 2^62 so int64 never
-# overflows in either engine.
+# band-bucket joins, never an all-pairs comparison). The Spark side is
+# operators/dedup.py, the package's one MinHash-LSH implementation. The
+# oracle rebuilds the same signature and bands in DuckDB from that
+# module's constants; _duck_minhash_bands is the only builder of them.
 # ---------------------------------------------------------------------------
 
-_N_HASHES = 16
-_N_BANDS = 4
-_ROWS_PER_BAND = _N_HASHES // _N_BANDS
-_MINHASH_P = 2_147_483_647  # 2^31 - 1
 
-
-def _perm_coeffs() -> list[tuple[int, int]]:
-    import random
-
-    rng = random.Random(7)
-    return [
-        (rng.randrange(1, _MINHASH_P), rng.randrange(0, _MINHASH_P))
-        for _ in range(_N_HASHES)
-    ]
-
-
-_PERMS = _perm_coeffs()
-
-
-def _duck_minhash_ctes() -> str:
-    """CTE list ending in ``cand`` (the LSH candidate pairs) — shared by
-    the pair query and the cluster-resolution recursive query."""
+def _duck_minhash_bands() -> str:
+    """CTE chain ending in ``bands`` (doc_id, band_idx, band_key): the
+    DuckDB twin of ``band_buckets(minhash_signature(documents))``."""
     sig_cols = ", ".join(
-        f"min(({a} * hh + {b}) % {_MINHASH_P}) AS h{i}"
+        f"min(({a} * hh + {b}) % {_MH_PRIME}) AS m{i}"
         for i, (a, b) in enumerate(_PERMS)
     )
     band_selects = " UNION ALL ".join(
-        "SELECT doc_id, {idx} AS band_idx, md5({parts}) AS band_val FROM sigs".format(
+        "SELECT doc_id, {idx} AS band_idx, md5({parts}) AS band_key FROM sigs".format(
             idx=b,
             parts=" || ':' || ".join(
-                f"CAST(h{b * _ROWS_PER_BAND + r} AS VARCHAR)"
+                f"CAST(m{b * _ROWS_PER_BAND + r} AS VARCHAR)"
                 for r in range(_ROWS_PER_BAND)
             ),
         )
@@ -254,78 +210,39 @@ def _duck_minhash_ctes() -> str:
 {_DUCK_SHINGLES_CTE},
 shh AS (
   SELECT doc_id,
-         CAST('0x' || substr(md5(sh), 1, 15) AS BIGINT) % {_MINHASH_P} AS hh
+         CAST('0x' || substr(md5(sh), 1, 15) AS BIGINT) % {_MH_PRIME} AS hh
   FROM sh
 ),
 sigs AS (SELECT doc_id, {sig_cols} FROM shh GROUP BY doc_id),
-bands AS ({band_selects}),
-cand AS (
-  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-  FROM bands a JOIN bands b
-    ON a.band_idx = b.band_idx AND a.band_val = b.band_val AND a.doc_id < b.doc_id
-)"""
+bands AS ({band_selects})"""
 
 
-def _duck_minhash_sql() -> str:
-    return f"WITH {_duck_minhash_ctes()} SELECT d1, d2 FROM cand"
+def _duck_band_pairs(rel: str) -> str:
+    """The DuckDB twin of ``band_pairs`` over the band rows in ``rel``."""
+    return f"""SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
+  FROM {rel} a JOIN {rel} b
+    ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id"""
+
+
+def _duck_minhash_ctes() -> str:
+    """CTE list ending in ``cand`` (the LSH candidate pairs) — shared by
+    the pair query and the cluster-resolution recursive queries."""
+    return f"{_duck_minhash_bands()},\ncand AS (\n  {_duck_band_pairs('bands')}\n)"
 
 
 @register(
     "dedup_minhash_lsh",
-    oracle=_duck_minhash_sql(),
+    oracle=f"WITH {_duck_minhash_ctes()} SELECT d1, d2 FROM cand",
     doc=f"MinHash ({_N_HASHES} hashes) + LSH banding ({_N_BANDS} bands x "
     f"{_ROWS_PER_BAND}): candidate near-dup pairs from band-bucket join",
     tags=["dedup", "minhash", "lsh"],
 )
 def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
-    sh = shingles(load(spark, sf_dir, "documents"))
-    hh = (
-        F.conv(F.substring(F.md5(F.col("sh").cast("binary")), 1, 15), 16, 10)
-        .cast("long")
-        % _MINHASH_P
-    )
-    shh = sh.select("doc_id", hh.alias("hh"))
-    sig_aggs = [
-        F.min((F.lit(a) * F.col("hh") + F.lit(b)) % _MINHASH_P).alias(f"h{i}")
-        for i, (a, b) in enumerate(_PERMS)
-    ]
-    sigs = shh.groupBy("doc_id").agg(*sig_aggs)
-    bands = sigs.select(
-        "doc_id",
-        *[
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    *[
-                        F.col(f"h{b * _ROWS_PER_BAND + r}").cast("string")
-                        for r in range(_ROWS_PER_BAND)
-                    ],
-                ).cast("binary")
-            ).alias(f"band{b}")
-            for b in range(_N_BANDS)
-        ],
-    )
-    stack_args = ", ".join(f"{b}, band{b}" for b in range(_N_BANDS))
-    stacked = bands.select(
-        "doc_id",
-        F.expr(f"stack({_N_BANDS}, {stack_args}) AS (band_idx, band_val)"),
-    ).select("doc_id", "band_idx", "band_val")
-    # Band-key self-join: both sides are the same subplan, so Spark plans a
-    # ReusedExchange — the banded rows are shuffled once, not twice.
-    # (Measured against a collect_list-bucket formulation at sf0.1: the
-    # join is ~20% faster; bucket membership is small by LSH design either
-    # way.)
-    a, b = stacked.alias("a"), stacked.alias("b")
-    return (
-        a.join(
-            b,
-            (F.col("a.band_idx") == F.col("b.band_idx"))
-            & (F.col("a.band_val") == F.col("b.band_val"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("d1"), F.col("b.doc_id").alias("d2"))
-        .distinct()
-    )
+    # The band-key self-join measured ~20% faster than a collect_list-
+    # bucket formulation at sf0.1; bucket membership is small by LSH
+    # design either way.
+    docs = load(spark, sf_dir, "documents")
+    return band_pairs(band_buckets(minhash_signature(docs)))
 
 
 # ---------------------------------------------------------------------------
@@ -374,44 +291,13 @@ def dedup_resolve_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
 # odd doc_ids arrive as the new batch. A batch doc is rejected if it
 # shares any band bucket with the index; intra-batch collisions resolve
 # via connected components keeping the lowest id. The oracle replays the
-# exact same portable (md5) hashing + banding + a recursive-CTE CC.
+# same md5 hashing + banding (_duck_minhash_bands) + a recursive-CTE CC.
 # ---------------------------------------------------------------------------
-
-
-def _duck_bands_prefix() -> str:
-    # Mirrors operators/dedup.py: m_i = min((hh*(2i+1) + i) % p) over the
-    # doc's md5-hashed shingles; band key = md5 of ':'-joined band values.
-    # CTE chain ends in ``bands`` (doc_id, band_idx, band_key); shared by
-    # the one-tick and two-tick incremental-dedup oracles.
-    p = 2_147_483_647  # operators.dedup._MH_PRIME
-    n_hashes, n_bands = 16, 4
-    rpb = n_hashes // n_bands
-    sig_cols = ", ".join(
-        f"min((hh * {2 * i + 1} + {i}) % {p}) AS m{i}" for i in range(n_hashes)
-    )
-    band_selects = " UNION ALL ".join(
-        "SELECT doc_id, {idx} AS band_idx, md5({parts}) AS band_key FROM sigs".format(
-            idx=b,
-            parts=" || ':' || ".join(
-                f"CAST(m{b * rpb + r} AS VARCHAR)" for r in range(rpb)
-            ),
-        )
-        for b in range(n_bands)
-    )
-    return f"""{_DUCK_WORDS_CTE},
-{_DUCK_SHINGLES_CTE},
-shh AS (
-  SELECT doc_id,
-         CAST('0x' || substr(md5(sh), 1, 15) AS BIGINT) % {p} AS hh
-  FROM sh
-),
-sigs AS (SELECT doc_id, {sig_cols} FROM shh GROUP BY doc_id),
-bands AS ({band_selects})"""
 
 
 def _duck_incremental_sql() -> str:
     return f"""
-WITH RECURSIVE {_duck_bands_prefix()},
+WITH RECURSIVE {_duck_minhash_bands()},
 idx AS (SELECT band_idx, band_key FROM bands WHERE doc_id % 2 = 0),
 probe AS (SELECT * FROM bands WHERE doc_id % 2 = 1),
 corpus_dups AS (
@@ -422,9 +308,7 @@ survivors AS (
   SELECT * FROM probe WHERE doc_id NOT IN (SELECT doc_id FROM corpus_dups)
 ),
 cand AS (
-  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-  FROM survivors a JOIN survivors b
-    ON a.band_idx = b.band_idx AND a.band_key = b.band_key AND a.doc_id < b.doc_id
+  {_duck_band_pairs("survivors")}
 ),
 edges AS (
   SELECT d1 AS src, d2 AS dst FROM cand UNION SELECT d2, d1 FROM cand
@@ -450,13 +334,13 @@ SELECT node AS doc_id FROM reach GROUP BY node HAVING node = min(root)
     tags=["dedup", "minhash", "incremental"],
 )
 def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import band_buckets, incremental_dedup, minhash_signature
+    from ..operators.dedup import incremental_dedup, minhash_signature
 
     d = load(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 2 == 0)
     batch = d.filter(F.col("doc_id") % 2 == 1)
-    index = band_buckets(minhash_signature(corpus, portable=True), portable=True)
-    accepted, _new_index_rows = incremental_dedup(index, batch, portable=True)
+    index = band_buckets(minhash_signature(corpus))
+    accepted, _new_index_rows = incremental_dedup(index, batch)
     return accepted.select("doc_id")
 
 
@@ -487,10 +371,7 @@ surv{n} AS (
   WHERE doc_id NOT IN (SELECT doc_id FROM cdup{n})
 ),
 cand{n} AS (
-  SELECT DISTINCT a.doc_id AS d1, b.doc_id AS d2
-  FROM surv{n} a JOIN surv{n} b
-    ON a.band_idx = b.band_idx AND a.band_key = b.band_key
-   AND a.doc_id < b.doc_id
+  {_duck_band_pairs(f"surv{n}")}
 ),
 edges{n} AS (
   SELECT d1 AS src, d2 AS dst FROM cand{n} UNION SELECT d2, d1 FROM cand{n}
@@ -505,7 +386,7 @@ acc{n} AS (
 )"""
 
     return f"""
-WITH RECURSIVE {_duck_bands_prefix()},
+WITH RECURSIVE {_duck_minhash_bands()},
 idx0 AS (SELECT band_idx, band_key FROM bands WHERE doc_id % 3 = 0),
 {tick(1, "idx0", "doc_id % 3 = 1").lstrip()},
 idx1 AS (
@@ -533,18 +414,18 @@ SELECT 2 AS tick, doc_id FROM acc2
     tags=["dedup", "minhash", "incremental", "streaming"],
 )
 def dedup_incremental_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import band_buckets, incremental_dedup, minhash_signature
+    from ..operators.dedup import incremental_dedup, minhash_signature
 
     d = load(spark, sf_dir, "documents")
     corpus = d.filter(F.col("doc_id") % 3 == 0)
     tick1 = d.filter(F.col("doc_id") % 3 == 1)
     tick2 = d.filter(F.col("doc_id") % 3 == 2)
-    idx0 = band_buckets(minhash_signature(corpus, portable=True), portable=True)
-    acc1, new1 = incremental_dedup(idx0, tick1, portable=True)
+    idx0 = band_buckets(minhash_signature(corpus))
+    acc1, new1 = incremental_dedup(idx0, tick1)
     idx1 = idx0.select("doc_id", "band_idx", "band_key").unionByName(
         new1.select("doc_id", "band_idx", "band_key")
     )
-    acc2, _new2 = incremental_dedup(idx1, tick2, portable=True)
+    acc2, _new2 = incremental_dedup(idx1, tick2)
     return acc1.select(F.lit(1).alias("tick"), "doc_id").unionByName(
         acc2.select(F.lit(2).alias("tick"), "doc_id")
     )

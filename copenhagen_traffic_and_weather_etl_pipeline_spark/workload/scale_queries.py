@@ -16,8 +16,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..operators.dedup import _words_col
 from . import load, register
-from .extension_queries import _DUCK_WORDS_CTE, _dot, _norm, _words_col
+from .extension_queries import _DUCK_WORDS_CTE, _dot, _norm
 from .reference_queries import _DUCK_K as _REF_DUCK_K
 from .reference_queries import _SPARK_K as _REF_SPARK_K
 

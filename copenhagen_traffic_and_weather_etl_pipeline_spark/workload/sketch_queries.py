@@ -16,8 +16,9 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.dedup import _words_col
 from . import load, register
-from .extension_queries import _DUCK_WORDS_CTE, _words_col
+from .extension_queries import _DUCK_WORDS_CTE
 
 # ---------------------------------------------------------------------------
 # Heavy hitters over the token stream: find every word whose frequency

@@ -264,6 +264,12 @@ def _join_streams(spark: SparkSession, in_dir: str) -> DataFrame:
     )
 
 
+def _read_sink(stream_df: DataFrame, out_dir: str) -> DataFrame:
+    """The drained parquet sink as a batch frame, read with the
+    topology's own schema: no footer-inference job."""
+    return stream_df.sparkSession.read.schema(stream_df.schema).parquet(out_dir)
+
+
 def _cleanup_staging(base: str) -> None:
     """Drop everything under the replay temp base except the parquet
     sink (what the returned DataFrame lazily reads): staged ticks,
@@ -315,11 +321,12 @@ FROM s GROUP BY user_id, sidx
 )
 def sessionize_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir, out_dir, ckpt = _stage_ticks(spark, sf_dir, sentinel=True)
+    stream = _session_stream(spark, in_dir)
     try:
-        _drain(_session_stream(spark, in_dir), out_dir, ckpt)
+        _drain(stream, out_dir, ckpt)
     finally:
         _cleanup_staging(os.path.dirname(in_dir))
-    return spark.read.parquet(out_dir).filter(F.col("user_id") >= 0)
+    return _read_sink(stream, out_dir).filter(F.col("user_id") >= 0)
 
 
 @register(
@@ -346,8 +353,9 @@ WHERE a.event_type = 'view' AND b.event_type = 'purchase'
 )
 def stream_join_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     in_dir, out_dir, ckpt = _stage_ticks(spark, sf_dir, sentinel=False)
+    stream = _join_streams(spark, in_dir)
     try:
-        _drain(_join_streams(spark, in_dir), out_dir, ckpt)
+        _drain(stream, out_dir, ckpt)
     finally:
         _cleanup_staging(os.path.dirname(in_dir))
-    return spark.read.parquet(out_dir)
+    return _read_sink(stream, out_dir)

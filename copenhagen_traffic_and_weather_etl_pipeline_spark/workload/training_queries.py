@@ -19,8 +19,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window as W
 
+from ..operators.dedup import _words_col, shingles
 from . import load, register
-from .extension_queries import _DUCK_WORDS_CTE, _words_col, shingles
+from .extension_queries import _DUCK_WORDS_CTE
 
 # ---------------------------------------------------------------------------
 # Sequence packing (concat-and-chunk): documents are laid end-to-end in a

@@ -48,8 +48,8 @@ def test_salted_agg_is_two_phase(spark):
 
 
 def test_minhash_band_join_is_equi_hash_join(spark):
-    # The band-bucket join must be a hash equi-join on (band_idx,
-    # band_val) — never a nested-loop over all pairs. (At tiny SF AQE
+    # The band-bucket join (operators.dedup.band_pairs) must be a hash
+    # equi-join on (band_idx, band_key) — never a nested-loop over all pairs. (At tiny SF AQE
     # broadcasts one side; at scale it's a shuffled hash/sort-merge join
     # on the bucket key — both fine, cartesian is not.)
     plan = plan_of(spark, "dedup_minhash_lsh")
