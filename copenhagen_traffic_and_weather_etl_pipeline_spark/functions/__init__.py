@@ -3,11 +3,10 @@ with built-in ``pyspark.sql.functions`` (JVM-side, codegen'd; zero Python
 UDFs).
 
 Reference parity map (SURVEY.md §2.6):
-- D1 PARSE_DATE('%Y-%m-%d', date)    -> :func:`parse_date_col`
-- D2/D3 PARSE_TIME + DATETIME(d, t)  -> :func:`compose_event_ts`
+- D1-D3 PARSE_DATE + PARSE_TIME + DATETIME(d, t) -> :func:`compose_event_ts`
   (Spark has no TIME type, so date+time compose directly to a timestamp,
-  which is the only thing the reference ever does with the parsed TIME:
-  bigquery_scheduled_query.sql:8-15)
+  which is the only thing the reference ever does with the parsed DATE
+  and TIME: bigquery_scheduled_query.sql:8-15)
 - D4 strftime date/time stamping      -> :func:`stamp_audit_columns`
 - M1 Kelvin→Celsius (x - 273.15)      -> ``operators.flatten._celsius``
 - T1/T2 "lat,lon" concat + str cast   -> ``operators.flatten._coords``
@@ -25,13 +24,8 @@ TIME_FMT = "HH:mm"  # reference '%H:%M'    (deployment_function.py:63)
 KELVIN_OFFSET = 273.15  # deployment_function.py:140-143
 
 
-def parse_date_col(date: Column | str) -> Column:
-    """D1: PARSE_DATE('%Y-%m-%d', date) (bigquery_scheduled_query.sql:9)."""
-    return F.to_date(F.col(date) if isinstance(date, str) else date, DATE_FMT)
-
-
 def compose_event_ts(date: Column | str, time: Column | str) -> Column:
-    """D2+D3: DATETIME(PARSE_DATE(date), PARSE_TIME(time)) -> timestamp.
+    """D1-D3: DATETIME(PARSE_DATE(date), PARSE_TIME(time)) -> timestamp.
 
     bigquery_scheduled_query.sql:8-11. Composed as one to_timestamp over
     the concatenated strings so Spark and the SQL oracle share identical

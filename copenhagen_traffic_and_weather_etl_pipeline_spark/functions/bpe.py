@@ -1,10 +1,12 @@
 """Reusable BPE tokenizer training (iterative form).
 
-``bpe_pair_merges`` in the registry unrolls two merges for the
-correctness gate; this module is the production API: learn N merges
-with a driver-side loop (each round collects exactly ONE row — the
-argmax pair — the same model-sized-state pattern as the k-means
-centroids), then encode text with the learned merge list.
+This module is the production API: learn N merges with a driver-side
+loop (each round collects exactly ONE row — the argmax pair — the same
+model-sized-state pattern as the k-means centroids), then encode text
+with the learned merge list. The registry entry ``bpe_pair_merges``
+unrolls two merges lazily for the correctness gate over this module's
+own vocabulary build (``word_frequencies``), spacing (``_spaced``) and
+pair counts (``_pair_counts``).
 
 Scale contract (Sennrich et al. 2016): the corpus is scanned once to
 build the word-frequency table; every subsequent round is O(vocab) —
@@ -18,15 +20,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..operators.dedup import _words_col
 
-def word_frequencies(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """One corpus scan -> (w, f) vocabulary frame (lowercase alpha
-    words, length 2-12 — mirror of the registry query's filter)."""
-    toks = F.split(
-        F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " "), " "
-    )
+
+def word_frequencies(docs: DataFrame) -> DataFrame:
+    """One corpus scan -> (w, f) vocabulary frame of ``docs.text``
+    (lowercase alpha words, length 2-12), split by the package's one
+    word splitter, ``operators.dedup._words_col``."""
     return (
-        docs.select(F.explode(toks).alias("tok"))
+        docs.select(F.explode(_words_col()).alias("tok"))
         .select(F.lower("tok").alias("w"))
         .filter(F.col("w").rlike("^[a-z]{2,12}$"))
         .groupBy("w")
@@ -98,16 +100,13 @@ def learn_bpe(
 
 
 def encode_with_merges(
-    docs: DataFrame,
-    merges: list[tuple[str, str, int]],
-    text_col: str = "text",
-    out_col: str = "bpe_tokens",
+    docs: DataFrame, merges: list[tuple[str, str, int]]
 ) -> DataFrame:
-    """Tokenize ``text_col`` with a learned merge list: each word is
+    """Tokenize ``docs.text`` with a learned merge list: each word is
     spaced to characters, the merges replay in learned order (the
     broadcast-literal rewrite — no join, no Python), and the symbol
-    string lands space-separated in ``out_col``."""
-    toks = F.regexp_replace(F.trim(F.col(text_col)), r"\s+", " ")
+    string lands space-separated in ``bpe_tokens``."""
+    toks = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
     # Word boundary sentinel "\x01" keeps merges from crossing words.
     s = F.concat(
         F.lit(" "),
@@ -119,4 +118,4 @@ def encode_with_merges(
     cleaned = F.trim(
         F.regexp_replace(F.regexp_replace(s, "\x01", ""), r"\s+", " ")
     )
-    return docs.withColumn(out_col, cleaned)
+    return docs.withColumn("bpe_tokens", cleaned)

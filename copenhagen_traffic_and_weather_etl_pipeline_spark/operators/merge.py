@@ -4,8 +4,9 @@ The reference refreshes its featured table by full rebuild
 (deployment_function.py:187-208 + WRITE_TRUNCATE); ``merge_into`` is
 the O(delta) alternative: apply a CDC batch (inserts, updates,
 deletes) to a target in ONE equi full-outer join on the merge key.
-``merge_upsert_cdc`` in the workload registry is the driver-checked
-instance of this operator.
+The registry entry ``merge_upsert_cdc`` runs this operator over a CDC
+batch derived from ``customer``, so its DuckDB oracle checks the code
+callers import.
 
 Scale: both sides shuffle once on the key (AQE picks the strategy;
 broadcast if the batch is small). At 100 TB pair this with a

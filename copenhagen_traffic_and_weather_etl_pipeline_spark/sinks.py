@@ -45,7 +45,6 @@ def append_table(
     format: str = "parquet",
     not_null: list[str] | None = None,
     on_violation: str = "reject",
-    quarantine_path: str | None = None,
 ) -> int | None:
     """S5: append-mode fact-table sink (deployment_function.py:188).
 
@@ -81,9 +80,9 @@ def append_table(
       :class:`NotNullViolation` BEFORE any file lands, keeping the
       append all-or-nothing like a BigQuery load job; or
     - ``on_violation="quarantine"``: split the batch — clean rows
-      append to ``path``, violating rows land in ``quarantine_path``
-      (default ``<path>_quarantine``) with the same layout — the
-      dead-letter pattern for pipelines that must not drop ticks. The
+      append to ``path``, violating rows land in ``<path>_quarantine``
+      with the same layout — the dead-letter pattern for pipelines that
+      must not drop ticks. The
       QUARANTINE write lands FIRST, deliberately: the two appends are
       not atomic together, so whichever commits before a failure gets
       duplicated when the caller (e.g. foreachBatch) retries the whole
@@ -152,7 +151,7 @@ def append_table(
                 f"column(s) {not_null}; first violating row: {hit[0].asDict()}"
             )
         bad, seen = with_run_metrics(df.where(viol), rows=F.count(F.lit(1)))
-        _append(bad, quarantine_path or path.rstrip("/") + "_quarantine", partition_by, format)
+        _append(bad, path.rstrip("/") + "_quarantine", partition_by, format)
         _append(df.where(~viol), path, partition_by, format)
         return seen.get["rows"]
     finally:
@@ -542,11 +541,12 @@ def zorder_key(c1, c2, bits: int = 16):
     column skip files. Inputs must already be integers in
     [0, 2**bits); pure shift/or/and expressions, fully codegen'd.
 
-    Bit convention: ``c1`` occupies the EVEN bits, ``c2`` the odd bits —
-    the same layout as ``workload.layout_queries._morton_expr``, so
-    z-range predicates and bucket stats computed by
-    ``zorder_cluster_key`` apply directly to files written through
-    ``compact_table_zorder`` (pinned by
+    Bit convention: ``c1`` occupies the EVEN bits, ``c2`` the odd bits.
+    The registry's ``zorder_cluster_key`` builds its key with this
+    function, so z-range predicates and bucket stats it computes apply
+    directly to files written through ``compact_table_zorder``; its
+    DuckDB oracle mirrors the layout in
+    ``workload.layout_queries._morton_expr`` (pinned by
     tests/test_layout_queries.py::test_zorder_key_matches_layout_query_convention).
 
     BREAKING LAYOUT MIGRATION: this convention is the reverse of the

@@ -129,9 +129,14 @@ def ingest_and_refresh(
     A clean one-file tick is seven Spark jobs: probe and append per
     table, the newer-stamp probe, and the publish's broadcast and write.
 
-    The checkpoint makes the whole thing exactly-once at the source level
-    (reprocessed files are deduplicated by the file-source log); the
-    snapshot publish is idempotent by construction.
+    The tick is at-least-once, not exactly-once. The checkpoint's
+    file-source log keeps a committed batch from being read again, and
+    the snapshot publish is idempotent, but the appends are not: a crash
+    after an append but before the batch commits makes the restart run
+    the whole batch again under the same ``batch_id``, and
+    ``append_table`` appends it a second time. A 20-row tick then leaves
+    40 rows in ``traffic_table``, and the snapshot joins each key more
+    than once.
 
     The snapshot is published through the version-pointer layout
     (:func:`~..sinks.overwrite_table_versioned`): a dashboard reader

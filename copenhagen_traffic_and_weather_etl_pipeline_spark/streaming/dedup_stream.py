@@ -46,11 +46,14 @@ def dedup_ingest_stream(
     to ``index_path``. Returns the started StreamingQuery.
 
     The batch is persisted across the two write actions so signatures
-    are computed once; the index append happens LAST so a mid-batch
-    failure replays against the pre-batch index (foreachBatch replays
-    the whole batch — appends of the same accepted set are idempotent
-    per doc_id for downstream consumers that dedup on read, and the
-    checkpoint prevents reprocessing committed batches).
+    are computed once. The checkpoint keeps a committed batch from
+    being processed again, but the appends are blind: a crash after an
+    append but before the batch commits re-appends that batch on
+    restart. A crash between the two appends replays the batch against
+    the pre-batch index, so its accepted documents land in
+    ``accepted_path`` a second time, and nothing downstream removes the
+    copies. (A crash after the index append is harmless: the replay
+    finds every document of the batch in the index and accepts none.)
     """
 
     def process_batch(batch_df: DataFrame, batch_id: int) -> None:

@@ -6,7 +6,9 @@ Two tiers, per the engine's design stance (built-ins first):
 
 1. ``session_window_stats`` — Spark's native ``session_window`` gap
    sessionization. State lives in the state store, bounded by the
-   watermark; no Python in the loop.
+   watermark; no Python in the loop. The registry entry
+   ``sessionize_stream_replay`` drains it over two replayed ticks and
+   checks the sessions against DuckDB's batch gaps-and-islands.
 2. ``stateful_user_totals`` — ``applyInPandasWithState``: the escape
    hatch for custom per-key state machines Spark lacks a built-in for.
    Here it keeps running per-user totals across micro-batches — the

@@ -3,10 +3,11 @@
 Four capabilities a 100 TB deployment of the reference pipeline needs
 that the registry did not yet cover:
 
-- ``merge_upsert_cdc``: MERGE INTO semantics (upsert + delete) expressed
-  as a full-outer join — the CDC refresh pattern behind the reference's
-  snapshot-overwrite sink (deployment_function.py:187-208 rebuilds the
-  featured table from scratch; this is the O(delta) alternative).
+- ``merge_upsert_cdc``: MERGE INTO semantics (upsert + delete) through
+  ``operators.merge.merge_into`` — the CDC refresh pattern behind the
+  reference's snapshot-overwrite sink (deployment_function.py:187-208
+  rebuilds the featured table from scratch; this is the O(delta)
+  alternative).
 - ``assign_contiguous_ids``: gap-free sequential IDs without a
   single-partition global sort — the two-level range-bucket ranking
   pattern (local rank within a logical bucket + exclusive running count
@@ -56,13 +57,14 @@ def _events_with_coords(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# MERGE INTO semantics via full-outer join. The CDC batch is derived
-# deterministically from the customer table itself: custkey % 7 == 0 ->
-# delete, == 1 -> update (+100.00 to the balance), == 2 -> insert (new
-# key far above the live key range). Both sides shuffle on the merge
-# key and AQE picks the join strategy; at 100 TB the target side would
-# additionally be bucket-pruned by the CDC batch's key range. Balances
-# are integer cents so the update arithmetic is exact on both engines.
+# MERGE INTO through ``operators.merge.merge_into`` (one full-outer
+# join). The CDC batch is derived deterministically from the customer
+# table itself: custkey % 7 == 0 -> delete, == 1 -> update (+100.00 to
+# the balance), == 2 -> insert (new key far above the live key range).
+# Both sides shuffle on the merge key and AQE picks the join strategy;
+# at 100 TB the target side would additionally be bucket-pruned by the
+# CDC batch's key range. Balances are integer cents so the update
+# arithmetic is exact on both engines.
 # ---------------------------------------------------------------------------
 
 
@@ -99,43 +101,35 @@ WHERE cdc.op IS NULL OR cdc.op <> 'D'
     tags=["cdc", "merge", "warehouse"],
 )
 def merge_upsert_cdc(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.merge import merge_into
+
     cust = load(spark, sf_dir, "customer")
     bal_c = F.round(F.col("c_acctbal") * 100).cast("bigint")
     target = cust.select(
-        F.col("c_custkey").alias("k"),
-        F.col("c_name").alias("t_name"),
-        F.col("c_mktsegment").alias("t_seg"),
-        bal_c.alias("t_bal"),
+        "c_custkey", "c_name", "c_mktsegment", bal_c.alias("bal_cents")
     )
     r = F.col("c_custkey") % 7
-    cdc = (
-        cust.filter(r <= 2)
-        .select(
-            F.when(r == 2, F.col("c_custkey") + F.lit(1_000_000_000_000))
-            .otherwise(F.col("c_custkey"))
-            .alias("k"),
-            F.when(r == 0, F.lit("D"))
-            .when(r == 1, F.lit("U"))
-            .otherwise(F.lit("I"))
-            .alias("op"),
-            (bal_c + F.when(r == 1, F.lit(10_000)).otherwise(F.lit(0))).alias("c_bal"),
-            F.concat(F.lit("cdc_customer_"), F.col("c_custkey").cast("string")).alias(
-                "c_name"
-            ),
-            F.lit("CDC").alias("c_seg"),
-        )
+    ins = r == 2
+    # U rows carry the customer's own name and segment, so the change
+    # winning over the target (merge_into's update rule) leaves them as
+    # they were and moves only the balance.
+    cdc = cust.filter(r <= 2).select(
+        F.when(ins, F.col("c_custkey") + F.lit(1_000_000_000_000))
+        .otherwise(F.col("c_custkey"))
+        .alias("c_custkey"),
+        F.when(r == 0, F.lit("D"))
+        .when(r == 1, F.lit("U"))
+        .otherwise(F.lit("I"))
+        .alias("op"),
+        F.when(ins, F.concat(F.lit("cdc_customer_"), F.col("c_custkey").cast("string")))
+        .otherwise(F.col("c_name"))
+        .alias("c_name"),
+        F.when(ins, F.lit("CDC"))
+        .otherwise(F.col("c_mktsegment"))
+        .alias("c_mktsegment"),
+        (bal_c + F.when(r == 1, F.lit(10_000)).otherwise(F.lit(0))).alias("bal_cents"),
     )
-    merged = target.join(cdc, "k", "full_outer").filter(
-        F.col("op").isNull() | (F.col("op") != "D")
-    )
-    ins = F.col("op") == "I"
-    upd_or_ins = F.col("op").isin("U", "I")
-    return merged.select(
-        F.col("k").alias("c_custkey"),
-        F.when(ins, F.col("c_name")).otherwise(F.col("t_name")).alias("c_name"),
-        F.when(ins, F.col("c_seg")).otherwise(F.col("t_seg")).alias("c_mktsegment"),
-        F.when(upd_or_ins, F.col("c_bal")).otherwise(F.col("t_bal")).alias("bal_cents"),
-    )
+    return merge_into(target, cdc, "c_custkey")
 
 
 # ---------------------------------------------------------------------------

@@ -47,10 +47,11 @@ from . import load, register
 # Morton / Z-order clustering key. Interleaves the bits of two 16-bit
 # dimensions so that points close in 2-D stay close in the 1-D sort
 # order — the property file-level min/max skipping needs to prune
-# multi-dimensional predicates. The expression is 32 unrolled
-# shift/mask terms: pure integer ops, whole-stage-codegen'd JVM-side,
-# no UDF. Coordinates reuse geo_cdc_queries' deterministic microdegree
-# derivation from event_id.
+# multi-dimensional predicates. Spark builds the key with the write
+# path's own ``sinks.zorder_key`` (32 unrolled shift/mask terms: pure
+# integer ops, whole-stage-codegen'd JVM-side, no UDF); ``_morton_expr``
+# is its DuckDB mirror for the oracle. Coordinates reuse
+# geo_cdc_queries' deterministic microdegree derivation from event_id.
 # ---------------------------------------------------------------------------
 
 _LAT_EXPR = "55640000 + (event_id * 40503) % 80000"
@@ -63,22 +64,13 @@ _Y16 = {"spark": "(((lon_u - 12500000) * 65536) div 100000)",
         "duck": "(((lon_u - 12500000) * 65536) // 100000)"}
 
 
-def _morton_expr(x: str, y: str, engine: str) -> str:
-    """32-term unrolled bit interleave of two 16-bit ints."""
+def _morton_expr(x: str, y: str) -> str:
+    """DuckDB SQL for ``sinks.zorder_key``: 32-term unrolled bit
+    interleave of two 16-bit ints, ``x`` on the even bits."""
     terms = []
     for i in range(16):
-        if engine == "spark":
-            # Cast the extracted bit to BIGINT before the shift: on INT
-            # inputs shiftleft(1, 31) wraps negative in 32-bit space.
-            terms.append(
-                f"shiftleft(cast(shiftright({x}, {i}) & 1 as bigint), {2 * i})"
-            )
-            terms.append(
-                f"shiftleft(cast(shiftright({y}, {i}) & 1 as bigint), {2 * i + 1})"
-            )
-        else:
-            terms.append(f"(CAST(({x} >> {i}) & 1 AS BIGINT) << {2 * i})")
-            terms.append(f"(CAST(({y} >> {i}) & 1 AS BIGINT) << {2 * i + 1})")
+        terms.append(f"(CAST(({x} >> {i}) & 1 AS BIGINT) << {2 * i})")
+        terms.append(f"(CAST(({y} >> {i}) & 1 AS BIGINT) << {2 * i + 1})")
     return "(" + " + ".join(terms) + ")"
 
 
@@ -89,7 +81,7 @@ WITH ec AS (
   SELECT {_LAT_EXPR} AS lat_u, {_LON_EXPR} AS lon_u FROM events
 ),
 z AS (
-  SELECT {_morton_expr(_X16['duck'], _Y16['duck'], 'duck')} AS zval FROM ec
+  SELECT {_morton_expr(_X16['duck'], _Y16['duck'])} AS zval FROM ec
 )
 SELECT zval // 16777216 AS z_bucket,
        count(*) AS n_events,
@@ -106,11 +98,13 @@ LIMIT 50
     tags=["layout", "zorder", "scale-pattern"],
 )
 def zorder_cluster_key(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..sinks import zorder_key
+
     ec = load(spark, sf_dir, "events").select(
         F.expr(_LAT_EXPR).alias("lat_u"), F.expr(_LON_EXPR).alias("lon_u")
     )
     z = ec.select(
-        F.expr(_morton_expr(_X16["spark"], _Y16["spark"], "spark")).alias("zval")
+        zorder_key(F.expr(_X16["spark"]), F.expr(_Y16["spark"])).alias("zval")
     )
     return (
         z.select(F.expr("zval div 16777216").alias("z_bucket"), "zval")

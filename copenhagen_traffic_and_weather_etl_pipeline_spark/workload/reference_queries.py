@@ -53,10 +53,13 @@ WHERE strptime(date_str || ' ' || time_str, '%Y-%m-%d %H:%M') = (
     tags=["J1", "J2", "F0", "A1", "D1", "D2", "D3", "D4"],
 )
 def flagship_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions import compose_event_ts, stamp_audit_columns
+
+    stamp = stamp_audit_columns(F.col("o_orderdate"))
     orders = load(spark, sf_dir, "orders").select(
         F.col("o_orderkey").alias("orderkey"),
-        F.date_format("o_orderdate", "yyyy-MM-dd").alias("date_str"),
-        F.date_format("o_orderdate", "HH:mm").alias("time_str"),
+        stamp["date"].alias("date_str"),
+        stamp["time"].alias("time_str"),
         "o_custkey",
         "o_orderstatus",
         "o_totalprice",
@@ -72,9 +75,7 @@ def flagship_latest_snapshot(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linestatus",
     )
     # Composed event timestamp (D3): DATETIME(PARSE_DATE(d), PARSE_TIME(t)).
-    ts = F.to_timestamp(
-        F.concat_ws(" ", F.col("date_str"), F.col("time_str")), "yyyy-MM-dd HH:mm"
-    )
+    ts = compose_event_ts("date_str", "time_str")
     # J2/A1: uncorrelated scalar MAX, broadcast as a 1-row frame. The
     # key-only filter is applied below the join (same result, and the join
     # input shrinks from full history to one snapshot before any shuffle).
@@ -150,12 +151,11 @@ WHERE CAST(ts AS TIMESTAMP) = (SELECT max(CAST(ts AS TIMESTAMP)) FROM events)
     tags=["J2", "F0", "A1"],
 )
 def scalar_subquery_latest(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators.snapshot import latest_snapshot_rows
+
     e = load(spark, sf_dir, "events")
-    mx = e.agg(F.max("ts").alias("max_ts"))
-    return (
-        e.crossJoin(F.broadcast(mx))
-        .filter(F.col("ts") == F.col("max_ts"))
-        .select("event_id", "ts", "user_id", "event_type", "value")
+    return latest_snapshot_rows(e, "ts").select(
+        "event_id", "ts", "user_id", "event_type", "value"
     )
 
 
@@ -175,12 +175,11 @@ FROM (
     tags=["F0", "window"],
 )
 def latest_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..operators import snapshot
+
     e = load(spark, sf_dir, "events")
-    w = W.partitionBy("user_id").orderBy(F.col("ts").desc(), F.col("event_id").desc())
-    return (
-        e.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .select("user_id", "event_id", "ts", "event_type")
+    return snapshot.latest_per_key(e, ["user_id"], "ts", "event_id").select(
+        "user_id", "event_id", "ts", "event_type"
     )
 
 
@@ -223,14 +222,16 @@ FROM events
     tags=["D1", "D2", "D3", "D4"],
 )
 def date_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions import compose_event_ts, stamp_audit_columns
+
     e = load(spark, sf_dir, "events")
-    d = F.date_format("ts", "yyyy-MM-dd")
-    t = F.date_format("ts", "HH:mm")
+    stamp = stamp_audit_columns(F.col("ts"))
+    d, t = stamp["date"], stamp["time"]
     return e.select(
         "event_id",
         d.alias("date_str"),
         t.alias("time_str"),
-        F.to_timestamp(F.concat_ws(" ", d, t), "yyyy-MM-dd HH:mm").alias("event_ts"),
+        compose_event_ts(d, t).alias("event_ts"),
     )
 
 

@@ -211,18 +211,13 @@ def _drain(stream_df: DataFrame, out_dir: str, ckpt_dir: str):
 
 
 def _session_stream(spark: SparkSession, in_dir: str) -> DataFrame:
-    """The session-window streaming topology the replay drains."""
-    return (
-        _read_tick_stream(spark, in_dir)
-        .withWatermark("ts", _SESS_WM)
-        .groupBy(F.session_window("ts", _GAP).alias("w"), "user_id")
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
+    """The session-window streaming topology the replay drains: the
+    package's ``streaming.sessions.session_window_stats`` at the
+    replay's gap and watermark."""
+    from ..streaming.sessions import session_window_stats
+
+    return session_window_stats(
+        _read_tick_stream(spark, in_dir), gap=_GAP, watermark=_SESS_WM
     )
 
 
@@ -308,11 +303,11 @@ SELECT user_id, min(tsm) AS session_start,
        count(*) AS n_events
 FROM s GROUP BY user_id, sidx
 """,
-    doc="REAL Structured Streaming session_window run (streaming/"
-    "sessions.py semantics): events stream in as two time-split "
-    "micro-batches (a far-future sentinel row rides the second tick "
-    "to advance the watermark; the final no-data micro-batch flushes "
-    "state); native gap sessionization "
+    doc="REAL Structured Streaming session_window run through "
+    "streaming.sessions.session_window_stats: events stream in as "
+    "two time-split micro-batches (a far-future sentinel row rides "
+    "the second tick to advance the watermark; the final no-data "
+    "micro-batch flushes state); native gap sessionization "
     "merges cross-batch state in the state store; the drained parquet "
     "sink must equal DuckDB's batch gaps-and-islands closure "
     "(session_end = last event + gap; an event at exactly the gap "
@@ -326,7 +321,11 @@ def sessionize_stream_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
         _drain(stream, out_dir, ckpt)
     finally:
         _cleanup_staging(os.path.dirname(in_dir))
-    return _read_sink(stream, out_dir).filter(F.col("user_id") >= 0)
+    return (
+        _read_sink(stream, out_dir)
+        .filter(F.col("user_id") >= 0)
+        .select("user_id", "session_start", "session_end", "n_events")
+    )
 
 
 @register(

@@ -794,6 +794,7 @@ SELECT 2 AS step, l AS left_sym, r AS right_sym, cnt AS pair_count FROM m2
     tags=["training", "tokenizer", "bpe"],
 )
 def bpe_pair_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    from ..functions.bpe import _pair_counts, _spaced, word_frequencies
     from ..plans import materialize_once
 
     d = load(spark, sf_dir, "documents")
@@ -808,44 +809,13 @@ def bpe_pair_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 1.18 s -> 0.88 s min (medians 1.35 -> 1.03); a further
     # materialize of the 1-row m1 argmax measured neutral and was
     # not adopted.
-    words = materialize_once(
-        d.select(F.explode(_words_col()).alias("tok"))
-        .select(F.lower("tok").alias("w"))
-        .filter(F.col("w").rlike("^[a-z]{2,12}$"))
-        .groupBy("w")
-        .agg(F.count("*").alias("f"))
-    )
-    sp = words.select(
-        F.concat(F.lit(" "), F.regexp_replace("w", "(.)", "$1 ")).alias("s"),
-        "f",
-    )
-
-    def pair_counts(df: DataFrame) -> DataFrame:
-        return (
-            df.withColumn("a", F.split(F.trim(F.col("s")), " "))
-            .filter(F.size("a") >= 2)
-            .select(
-                F.explode(
-                    F.expr(
-                        "transform(sequence(1, size(a)-1), "
-                        "i -> concat(element_at(a, i), '~', element_at(a, i+1)))"
-                    )
-                ).alias("p"),
-                "f",
-            )
-            .groupBy("p")
-            .agg(F.sum("f").alias("cnt"))
-            .select(
-                F.split("p", "~").getItem(0).alias("l"),
-                F.split("p", "~").getItem(1).alias("r"),
-                "cnt",
-            )
-        )
+    words = materialize_once(word_frequencies(d))
+    sp = _spaced(words)
 
     def top1(pc: DataFrame) -> DataFrame:
         return pc.orderBy(F.desc("cnt"), "l", "r").limit(1)
 
-    m1 = top1(pair_counts(sp))
+    m1 = top1(_pair_counts(sp))
     merged1 = sp.crossJoin(
         F.broadcast(m1.select(F.col("l").alias("ml"), F.col("r").alias("mr")))
     )
@@ -854,7 +824,7 @@ def bpe_pair_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     sp2 = merged1.select(
         F.replace(F.replace(F.col("s"), pat, rep), pat, rep).alias("s"), "f"
     )
-    m2 = top1(pair_counts(sp2))
+    m2 = top1(_pair_counts(sp2))
 
     def row(step: int, m: DataFrame) -> DataFrame:
         return m.select(

@@ -46,13 +46,24 @@ def _morton_py(x: int, y: int) -> int:
     return z
 
 
-def test_morton_expr_matches_python_reference(spark):
+def _morton_duck(pts: list[tuple[int, int]]) -> list[int]:
+    # The oracle's Morton SQL, evaluated by DuckDB over INT points.
+    import duckdb
+
+    con = duckdb.connect()
+    rows = ", ".join(f"({i}, {x}, {y})" for i, (x, y) in enumerate(pts))
+    return [
+        z
+        for (z,) in con.execute(
+            f"SELECT {_morton_expr('x', 'y')} FROM (VALUES {rows}) t(i, x, y) "
+            "ORDER BY i"
+        ).fetchall()
+    ]
+
+
+def test_morton_expr_matches_python_reference():
     pts = [(0, 0), (1, 0), (0, 1), (65535, 65535), (12345, 54321), (40000, 3)]
-    df = spark.createDataFrame(pts, "x INT, y INT").selectExpr(
-        "x", "y", _morton_expr("x", "y", "spark") + " AS z"
-    )
-    for r in df.collect():
-        assert r.z == _morton_py(r.x, r.y), (r.x, r.y)
+    assert _morton_duck(pts) == [_morton_py(x, y) for x, y in pts]
 
 
 def test_morton_preserves_2d_locality_better_than_rowmajor(spark):
@@ -261,21 +272,23 @@ def test_zorder_key_decode_roundtrip_hypothesis(spark):
 
 
 def test_zorder_key_matches_layout_query_convention(spark):
-    # sinks.zorder_key (the write path) and the layout query's morton
-    # expression (the stats/pruning path) MUST share one bit layout
-    # (c1/x at even bits): z-range predicates computed from
-    # zorder_cluster_key only apply to files written by
-    # compact_table_zorder if the keys are identical.
+    # sinks.zorder_key (Spark: the write path and zorder_cluster_key)
+    # and the oracle's Morton SQL (DuckDB) MUST share one bit layout
+    # (c1/x at even bits), or the registry's oracle would check a key
+    # the package never writes.
     from pyspark.sql import functions as F
 
     from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import zorder_key
 
     pts = [(3, 0), (0, 3), (12345, 54321), (65535, 1)]
-    df = spark.createDataFrame(pts, "a LONG, b LONG")
-    rows = df.select(
-        zorder_key(F.col("a"), F.col("b")).alias("z_sink"),
-        F.expr(_morton_expr("a", "b", "spark")).alias("z_query"),
-    ).collect()
-    for r in rows:
-        assert r.z_sink == r.z_query
-    assert rows[0].z_sink == 0b0101  # a=3 at even bits
+    df = spark.createDataFrame(
+        [(i, a, b) for i, (a, b) in enumerate(pts)], "i INT, a LONG, b LONG"
+    )
+    z_sink = [
+        r.z
+        for r in df.orderBy("i")
+        .select(zorder_key(F.col("a"), F.col("b")).alias("z"))
+        .collect()
+    ]
+    assert z_sink == _morton_duck(pts)
+    assert z_sink[0] == 0b0101  # a=3 at even bits
