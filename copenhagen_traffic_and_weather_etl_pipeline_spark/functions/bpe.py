@@ -103,10 +103,11 @@ def encode_with_merges(
     docs: DataFrame, merges: list[tuple[str, str, int]]
 ) -> DataFrame:
     """Tokenize ``docs.text`` with a learned merge list: each word is
-    spaced to characters, the merges replay in learned order (the
-    broadcast-literal rewrite — no join, no Python), and the symbol
-    string lands space-separated in ``bpe_tokens``."""
-    toks = F.regexp_replace(F.trim(F.col("text")), r"\s+", " ")
+    lowercased like :func:`word_frequencies` and spaced to characters,
+    the merges replay in learned order (the broadcast-literal rewrite —
+    no join, no Python), and the symbol string lands space-separated in
+    ``bpe_tokens``."""
+    toks = F.regexp_replace(F.trim(F.lower(F.col("text"))), r"\s+", " ")
     # Word boundary sentinel "\x01" keeps merges from crossing words.
     s = F.concat(
         F.lit(" "),

@@ -102,8 +102,7 @@ def latest_snapshot_since(
     The probe is one job: ``coalesce(1)`` hands the pruned files to one
     task, where ``limit``'s own scale-up would launch a job per wave of
     files; with ``time`` pushed down, that task reads little more than
-    the footers of one day's files (``compact_table`` keeps their count
-    down where a day holds thousands).
+    the footers of one day's files.
 
     The canonical zero-padded strings sort like the times they stamp,
     which is what makes string predicates here agree with

@@ -94,47 +94,7 @@ def materialize_once(df: DataFrame) -> DataFrame:
     magnitude smaller than their producing scan — a lost block fails
     the job and the retry starts clean.
 
-    **Durability switch**: on a long-running 1000-executor job where
-    executor churn is routine, set ``spark.cph_etl.reliableCheckpoint=true``
-    (spark.conf) to swap in reliable ``df.checkpoint()`` — same lineage
-    cut, blocks on replicated storage. Requires a checkpoint dir: set it via
-    ``sparkContext.setCheckpointDir`` or ``spark.cph_etl.checkpointDir``
-    (the conf is applied on first use here). Call sites stay identical;
-    only the durability/cost point moves. Plan gates that need the
-    upstream subtree must inspect the pre-checkpoint frame (the final
-    plan sees an RDD scan).
+    Plan gates that need the upstream subtree must inspect the
+    pre-checkpoint frame (the final plan sees an RDD scan).
     """
-    if _reliable_checkpoint_enabled(df):
-        # Reliable checkpoints write eagerly through the RDD API; the
-        # lazy flavor only applies to localCheckpoint. Eager is the
-        # right cost model here anyway: a cluster opting into durability
-        # is exactly the one that cannot afford silent lineage loss.
-        _ensure_checkpoint_dir(df)
-        return df.checkpoint(eager=True)
     return df.localCheckpoint(eager=False)
-
-
-def _reliable_checkpoint_enabled(df: DataFrame) -> bool:
-    try:
-        return (
-            df.sparkSession.conf.get("spark.cph_etl.reliableCheckpoint", "false")
-            .lower()
-            == "true"
-        )
-    except Exception:  # noqa: BLE001 - conf lookup never blocks the plan
-        return False
-
-
-def _ensure_checkpoint_dir(df: DataFrame) -> None:
-    """Point the SparkContext at a checkpoint dir if the caller supplied
-    one via conf and none is set yet. On a real cluster this should be
-    replicated storage (HDFS/object store), not local disk."""
-    sc = df.sparkSession.sparkContext
-    if sc.getCheckpointDir() is not None:
-        return
-    try:
-        conf_dir = df.sparkSession.conf.get("spark.cph_etl.checkpointDir", None)
-    except Exception:  # noqa: BLE001
-        conf_dir = None
-    if conf_dir:
-        sc.setCheckpointDir(conf_dir)

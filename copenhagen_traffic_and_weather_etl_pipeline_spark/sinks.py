@@ -15,13 +15,6 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 
-class NotNullViolation(ValueError):
-    """Raised by :func:`append_table` in ``reject`` mode when the batch
-    carries a NULL in a declared NOT NULL column — the Spark-side
-    equivalent of a BigQuery load job failing the table's NOT NULL
-    schema (bigquery_table_creation_queries.sql:2-19,23-37)."""
-
-
 def _not_null_violation_cond(cols: list[str]):
     """One ``a IS NULL OR b IS NULL OR ...`` expression: a single
     Python->JVM call however many columns the guard covers."""
@@ -31,106 +24,68 @@ def _not_null_violation_cond(cols: list[str]):
     return F.expr(" OR ".join(f"{c} IS NULL" for c in quoted))
 
 
-def _append(df: DataFrame, path: str, partition_by: list[str] | None, format: str) -> None:
-    writer = df.write.mode("append").format(format)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.save(path)
+def _append(df: DataFrame, path: str, partition_by: list[str] | None) -> None:
+    df.write.save(path, format="parquet", mode="append", partitionBy=partition_by)
 
 
 def append_table(
     df: DataFrame,
     path: str,
     partition_by: list[str] | None = None,
-    format: str = "parquet",
     not_null: list[str] | None = None,
-    on_violation: str = "reject",
 ) -> int | None:
-    """S5: append-mode fact-table sink (deployment_function.py:188).
+    """S5: append-mode Parquet fact-table sink (deployment_function.py:188).
 
     Unlike the reference's 40 one-row load jobs per tick, a single
     distributed write lands the whole batch; ``partition_by=['date']``
-    keeps per-day files together so time filters prune. ``format``
-    takes any Spark-built-in table format (parquet default; orc keeps
-    identical pruning/pushdown behavior, json/csv for interchange —
-    columnar stats-based skipping is lost outside parquet/orc).
-
-    BigQuery parity passthrough: the reference's actual sink is a
-    BigQuery load job (``pandas_gbq.to_gbq``,
-    deployment_function.py:182-196). ``format="bigquery"`` passes
-    straight through to the open-source Spark BigQuery connector —
-    ``path`` becomes the ``dataset.table`` save target (connector
-    options such as ``writeMethod``/``temporaryGcsBucket`` are session
-    conf, set before calling). The NOT NULL guard below runs
-    ENGINE-SIDE first, so reject/quarantine semantics are identical
-    across formats: a violating batch raises (or dead-letters to
-    ``<dataset.table>_quarantine``) before anything reaches the
-    connector. The connector jar is not bundled here; without it Spark
-    raises its DATA_SOURCE_NOT_FOUND error at the write — the contract
-    up to that boundary is pinned in tests/test_plans_sinks_functions.py.
+    keeps per-day files together so time filters prune.
 
     NOT NULL enforcement (bigquery_table_creation_queries.sql:2-19):
-    the reference's BigQuery DDL makes every ingested column NOT NULL
-    and the load job HARD-FAILS on violation; Spark's parquet catalog
-    treats declared nullability as advisory, so the guard lives at the
-    write: pass ``not_null=[cols...]`` and either
+    the reference's BigQuery DDL makes every ingested column NOT NULL;
+    Spark's parquet catalog treats declared nullability as advisory, so
+    the guard lives at the write. Pass ``not_null=[cols...]`` and the
+    batch is split: clean rows append to ``path``, violating rows land
+    in ``<path>_quarantine`` with the same layout — the dead-letter
+    pattern, so one bad record never kills the stream.
 
-    - ``on_violation="reject"`` (default): probe for one violating row
-      (``LIMIT 1`` — early-out scan, no full count) and raise
-      :class:`NotNullViolation` BEFORE any file lands, keeping the
-      append all-or-nothing like a BigQuery load job; or
-    - ``on_violation="quarantine"``: split the batch — clean rows
-      append to ``path``, violating rows land in ``<path>_quarantine``
-      with the same layout — the dead-letter pattern for pipelines that
-      must not drop ticks. The
-      QUARANTINE write lands FIRST, deliberately: the two appends are
-      not atomic together, so whichever commits before a failure gets
-      duplicated when the caller (e.g. foreachBatch) retries the whole
-      batch. Under commit-on-job-success semantics (FileOutputCommitter
-      algorithm v1 — Spark's default here) a failed append commits
-      nothing visible, so quarantine-first bounds the retry damage to
-      duplicate DEAD-LETTER rows — benign for a triage table nothing
-      downstream aggregates — whereas clean-first would silently
-      duplicate FACT rows that the snapshot join and every downstream
-      aggregate read. Committer v2 / direct cloud committers publish
-      per-TASK, so a mid-job failure can leave partial files on EITHER
-      table and the bound weakens to "partial rows only on the table
-      whose write failed" — quarantine-first is still the better order
-      (the fact append runs last, so fact partials require the fact
-      write itself to fail), but exactly-once it is not. True
-      exactly-once across retries of a two-table append needs a
-      transactional table format (Delta/Iceberg), which this
-      parquet-dir sink intentionally doesn't assume.
+    The QUARANTINE write lands FIRST, deliberately: the two appends are
+    not atomic together, so whichever commits before a failure gets
+    duplicated when the caller (e.g. foreachBatch) retries the whole
+    batch. Under commit-on-job-success semantics (FileOutputCommitter
+    algorithm v1 — Spark's default here) a failed append commits
+    nothing visible, so quarantine-first bounds the retry damage to
+    duplicate DEAD-LETTER rows — benign for a triage table nothing
+    downstream aggregates — whereas clean-first would silently
+    duplicate FACT rows that the snapshot join and every downstream
+    aggregate read. Committer v2 / direct cloud committers publish
+    per-TASK, so a mid-job failure can leave partial files on either
+    table; quarantine-first is still the better order, but exactly-once
+    it is not.
 
-    Probe first: both modes run the same ``LIMIT 1`` probe for a
-    violating row over the persisted batch. A clean batch — the normal
-    tick — then costs two jobs, the probe and the append. Only when the
-    probe finds a row does quarantine mode write the violating rows
-    (counted by an observation on that write, not by a second pass)
-    and filter them out of the append.
+    Probe first: a ``LIMIT 1`` probe looks for a violating row over the
+    persisted batch. A clean batch — the normal tick — then costs two
+    jobs, the probe and the append. Only when the probe finds a row are
+    the violating rows written (counted by an observation on that
+    write, not by a second pass) and filtered out of the append.
 
-    Returns the quarantined-row count (0 under a passing reject), or
-    None when no ``not_null`` check was requested. The batch is
-    persisted for the duration of the check so the probe, the split,
-    and the writes all see ONE materialization of the input — without
-    it a non-deterministic plan (rand/sample/re-read of a moving
-    source) could pass the reject probe yet land a NULL, or
-    drop/duplicate rows between the two quarantine splits. Scale note:
-    on a clean batch the probe scans the whole batch (nothing stops it
-    early), filling the cache the append then reads, so the guard costs
-    one extra scan of the batch plus its cache footprint; batches here
-    are per-tick appends, orders of magnitude smaller than the table.
-    The probe takes one job per wave of partitions it scans (Spark's
-    ``limit`` scale-up), so a one-file tick is one job. Never run the
-    guard over the accumulated table itself (that's
-    ``dq_expectations``' job as a publish gate).
+    Returns the quarantined-row count, or None when no ``not_null``
+    check was requested. The batch is persisted for the duration of the
+    check so the probe, the split, and the writes all see ONE
+    materialization of the input — without it a non-deterministic plan
+    (rand/sample/re-read of a moving source) could drop or duplicate
+    rows between the two splits. Scale note: on a clean batch the probe
+    scans the whole batch (nothing stops it early), filling the cache
+    the append then reads, so the guard costs one extra scan of the
+    batch plus its cache footprint; batches here are per-tick appends,
+    orders of magnitude smaller than the table. The probe takes one job
+    per wave of partitions it scans (Spark's ``limit`` scale-up), so a
+    one-file tick is one job. Never run the guard over the accumulated
+    table itself (that's ``dq_expectations``' job as a publish gate).
     """
     _guard_not_versioned_root(path)
     if not not_null:
-        _append(df, path, partition_by, format)
+        _append(df, path, partition_by)
         return None
-    if on_violation not in ("reject", "quarantine"):
-        raise ValueError(f"on_violation must be reject|quarantine, got {on_violation!r}")
     missing = [c for c in not_null if c not in df.columns]
     if missing:
         raise ValueError(f"not_null columns absent from batch: {missing}")
@@ -141,18 +96,12 @@ def append_table(
     df = df.persist()
     try:
         viol = _not_null_violation_cond(not_null)
-        hit = df.where(viol).limit(1).collect()
-        if not hit:
-            _append(df, path, partition_by, format)
+        if not df.where(viol).limit(1).collect():
+            _append(df, path, partition_by)
             return 0
-        if on_violation == "reject":
-            raise NotNullViolation(
-                f"append to {path} rejected: NULL in declared NOT NULL "
-                f"column(s) {not_null}; first violating row: {hit[0].asDict()}"
-            )
         bad, seen = with_run_metrics(df.where(viol), rows=F.count(F.lit(1)))
-        _append(bad, path.rstrip("/") + "_quarantine", partition_by, format)
-        _append(df.where(~viol), path, partition_by, format)
+        _append(bad, path.rstrip("/") + "_quarantine", partition_by)
+        _append(df.where(~viol), path, partition_by)
         return seen.get["rows"]
     finally:
         df.unpersist()
@@ -165,9 +114,7 @@ def _guard_not_versioned_root(path: str) -> None:
     """Refuse appends into a version-pointer root: an append would land
     part files beside ``v_<n>``/``_CURRENT``, a mixed layout the
     retention sweep never cleans and path readers choke on. The mirror
-    image of :func:`overwrite_table_versioned`'s migration guard.
-    ``path`` may be a non-filesystem target (e.g. a BigQuery
-    ``dataset.table``) — those never have a pointer file and pass."""
+    image of :func:`overwrite_table_versioned`'s migration guard."""
     from pathlib import Path
 
     if (Path(path) / _CURRENT_POINTER).exists():
@@ -179,7 +126,7 @@ def _guard_not_versioned_root(path: str) -> None:
 
 
 def overwrite_table_versioned(
-    df: DataFrame, path: str, format: str = "parquet", keep: int = 1
+    df: DataFrame, path: str, keep: int = 1
 ) -> str:
     """Reader-safe, crash-atomic snapshot refresh via a version-pointer
     layout — MVCC-in-a-directory, the trick every ACID table format
@@ -203,12 +150,10 @@ def overwrite_table_versioned(
        directory — the rename is atomic on POSIX and the fsync pair
        makes the POINTER durable and tear-free (every reader sees
        either the old pointer or the new one, never a missing or
-       half-written table; contrast :func:`_swap_in`'s brief
-       table-absent window between its two directory renames). The
-       step-1 data fsync holds for local filesystems only: on a real
-       cluster writing HDFS/object storage, data durability is the
-       store's contract (HDFS hflush/hsync on commit, object-store
-       PUT-is-durable), not this function's,
+       half-written table). The step-1 data fsync holds for local
+       filesystems only: on a real cluster writing HDFS/object storage,
+       data durability is the store's contract (HDFS hflush/hsync on
+       commit, object-store PUT-is-durable), not this function's,
     3. sweeps every version dir not on the new history: the current
        one plus the ``keep`` most recently PUBLISHED predecessors
        survive, so a reader that resolved the pointer up to ``keep``
@@ -271,7 +216,7 @@ def overwrite_table_versioned(
     )
     nxt = root / f"v_{int(versions[-1].name[2:]) + 1 if versions else 0}"
 
-    df.write.mode("overwrite").format(format).save(str(nxt))
+    df.write.save(str(nxt), format="parquet", mode="overwrite")
 
     # Data-before-pointer durability (docstring step 1): local-FS writes
     # are not fsynced by Spark's committer; flush the version's blocks
@@ -324,9 +269,7 @@ def overwrite_table_versioned(
     return str(nxt)
 
 
-def read_table_versioned(
-    spark: SparkSession, path: str, format: str = "parquet"
-) -> DataFrame:
+def read_table_versioned(spark: SparkSession, path: str) -> DataFrame:
     """Resolve a version-pointer table (see
     :func:`overwrite_table_versioned`) and read its live version (the
     pointer's first line; the rest is retained history). The pointer
@@ -335,7 +278,7 @@ def read_table_versioned(
     a single reader), because published version dirs are never
     mutated, only superseded and eventually swept (after ``keep``
     further refreshes)."""
-    return spark.read.format(format).load(live_version(path))
+    return spark.read.parquet(live_version(path))
 
 
 def live_version(path: str) -> str:
@@ -372,162 +315,6 @@ def write_bucketed(
     )
 
 
-def compact_table(
-    spark: SparkSession,
-    path: str,
-    target_files: int,
-    sort_col: str | None = None,
-) -> int:
-    """Small-file compaction: rewrite a parquet table into
-    ``target_files`` files, optionally range-sorted on ``sort_col``.
-
-    Hourly appends (the reference lands a batch every tick) accumulate
-    files far smaller than one HDFS/S3 block; at 100 TB the resulting
-    per-file open/seek overhead dominates scan time. Compaction is the
-    standing maintenance job: ``repartitionByRange(sort_col)`` (or a
-    plain round-robin ``repartition``) re-clusters rows so parquet
-    row-group min/max stats become disjoint and time filters skip whole
-    files. Writes to a temp dir first, then swaps via two directory
-    renames (old aside → new in → delete old) — readers never see a
-    half-WRITTEN table, and a crash mid-swap leaves either the old or
-    the new table intact on disk (never data loss — the rmtree-then-move
-    ordering this replaces could lose the table for the whole deletion).
-    Two stated limits of the rename swap: (1) between the two renames
-    the table is briefly ABSENT at ``path`` — a concurrent reader can
-    get a transient FileNotFound (see :func:`_swap_in`); (2) a crash
-    there parks the table at an ``_old_*`` sibling. Every compaction
-    call therefore starts with :func:`_sweep_orphans`, which restores a
-    parked table and clears leaked staging dirs — recovery is
-    automatic, not manual. On object stores without atomic rename, use
-    a catalog/manifest-swap format (Iceberg/Delta) instead. Returns the
-    number of data files written.
-
-    On a version-pointer table (see :func:`overwrite_table_versioned`)
-    both stated limits disappear: the compacted rewrite lands as the
-    next immutable ``v_<n>`` and publishes via the atomic pointer flip,
-    so readers never see an absent table and a crash at any point
-    leaves the old version live — compaction becomes just another
-    snapshot refresh. Detection is automatic (the ``_CURRENT`` file).
-    """
-    df = _read_for_maintenance(spark, path)
-    if sort_col is not None:
-        out = df.repartitionByRange(target_files, sort_col).sortWithinPartitions(
-            sort_col
-        )
-    else:
-        out = df.repartition(target_files)
-    return _publish_compacted(out, path, "compact")
-
-
-def _is_versioned(path: str) -> bool:
-    from pathlib import Path
-
-    return (Path(path) / _CURRENT_POINTER).exists()
-
-
-def _read_for_maintenance(spark: SparkSession, path: str) -> DataFrame:
-    """Source resolution shared by the compaction jobs: a version-pointer
-    table reads its live immutable version (no orphan sweep needed —
-    :func:`overwrite_table_versioned` sweeps its own); a plain directory
-    first runs :func:`_sweep_orphans` crash recovery, then reads in
-    place."""
-    if _is_versioned(path):
-        return read_table_versioned(spark, path)
-    _sweep_orphans(path)
-    return spark.read.parquet(path)
-
-
-def _publish_compacted(out: DataFrame, path: str, tag: str) -> int:
-    """Publish a compacted rewrite. Version-pointer table: write the
-    next immutable ``v_<n>`` and flip the pointer (crash-atomic,
-    reader-safe — the lazy ``out`` plan scans the OLD version dir while
-    writing the new one, so read and write never touch the same files),
-    preserving the retention depth the table's owner established (the
-    pointer's history length — a maintenance job must not shorten the
-    window long readers were promised). Plain directory: staged write +
-    two-rename :func:`_swap_in`. Returns the number of parquet files
-    written."""
-    from pathlib import Path
-
-    if _is_versioned(path):
-        history = (Path(path) / _CURRENT_POINTER).read_text().splitlines()
-        published = overwrite_table_versioned(
-            out, path, keep=max(len(history) - 1, 1)
-        )
-        return _count_parquet_files(published)
-    tmp = _staging_sibling(path, tag)
-    out.write.mode("overwrite").parquet(tmp)
-    return _swap_in(path, tmp)
-
-
-def _count_parquet_files(path: str) -> int:
-    from pathlib import Path
-
-    return sum(1 for p in Path(path).iterdir() if p.name.endswith(".parquet"))
-
-
-def _staging_sibling(path: str, tag: str) -> str:
-    import uuid
-    from pathlib import Path
-
-    return str(
-        Path(path).with_name(Path(path).name + f"_{tag}_{uuid.uuid4().hex[:8]}")
-    )
-
-
-def _swap_in(path: str, tmp: str) -> int:
-    """Replace the table dir at ``path`` with the staged dir ``tmp``
-    via two same-parent renames, then delete the displaced old dir.
-    Same-parent keeps both renames on one filesystem (true directory
-    renames, not copies). Returns the new dir's parquet file count.
-
-    Consistency window, stated precisely: between the two renames
-    nothing exists at ``path`` — a concurrent reader listing the table
-    at that instant gets FileNotFound (a transient it must retry), and
-    a crash there leaves the table parked at the ``_old_*`` sibling
-    until the next :func:`compact_table` call's :func:`_sweep_orphans`
-    restores it. What the two-rename ordering guarantees is NO DATA
-    LOSS at any crash point (the rmtree-then-move it replaced could
-    lose the table for the whole deletion) — not reader-invisible
-    atomicity, which on a plain filesystem needs a version-pointer
-    indirection or an ACID table format."""
-    import shutil
-
-    old = _staging_sibling(path, "old")
-    shutil.move(path, old)
-    shutil.move(tmp, path)
-    shutil.rmtree(old)
-    return _count_parquet_files(path)
-
-
-def _sweep_orphans(path: str) -> None:
-    """Crash recovery for :func:`_swap_in`'s leftovers, run at the
-    start of every compaction: if ``path`` is missing but a displaced
-    ``_old_*`` sibling exists (crash between the two renames), rename
-    the old table back into place — the interrupted compaction is
-    simply redone; then delete any remaining ``_old_*`` /
-    ``_compact_*`` / ``_zorder_*`` staging siblings (an ``_old_*``
-    with ``path`` present means the crash hit after the new table was
-    already in; a staging dir with ``path`` present was never swapped
-    in — both are safe to drop)."""
-    import shutil
-    from pathlib import Path
-
-    p = Path(path)
-    prefixes = tuple(p.name + f"_{tag}_" for tag in ("old", "compact", "zorder"))
-    siblings = sorted(
-        s for s in p.parent.glob(p.name + "_*") if s.name.startswith(prefixes)
-    )
-    if not p.exists():
-        olds = [s for s in siblings if s.name.startswith(p.name + "_old_")]
-        if olds:
-            restored = olds.pop()
-            shutil.move(str(restored), path)
-            siblings = [s for s in siblings if s != restored]
-    for s in siblings:
-        shutil.rmtree(s)
-
-
 def zorder_key(c1, c2, bits: int = 16):
     """Morton (Z-order) interleave of two bucketed integer columns —
     the multi-dimensional clustering key Spark has no built-in for.
@@ -543,18 +330,9 @@ def zorder_key(c1, c2, bits: int = 16):
 
     Bit convention: ``c1`` occupies the EVEN bits, ``c2`` the odd bits.
     The registry's ``zorder_cluster_key`` builds its key with this
-    function, so z-range predicates and bucket stats it computes apply
-    directly to files written through ``compact_table_zorder``; its
-    DuckDB oracle mirrors the layout in
+    function; its DuckDB oracle mirrors the layout in
     ``workload.layout_queries._morton_expr`` (pinned by
     tests/test_layout_queries.py::test_zorder_key_matches_layout_query_convention).
-
-    BREAKING LAYOUT MIGRATION: this convention is the reverse of the
-    pre-unification one (``c1`` on odd bits). A table compacted with
-    ``compact_table_zorder`` under the old convention silently
-    mis-sorts against new z-range predicates and ``zorder_decode``
-    output — re-run ``compact_table_zorder`` (re-OPTIMIZE) on any such
-    table before relying on z-key file skipping.
     """
     from pyspark.sql import functions as F
 
@@ -591,32 +369,6 @@ def zorder_decode(zkey, bits: int = 16):
     return c1, c2
 
 
-def compact_table_zorder(
-    spark: SparkSession,
-    path: str,
-    target_files: int,
-    col1: str,
-    col2: str,
-    bits: int = 16,
-) -> int:
-    """``compact_table`` variant clustered on the Z-order key of two
-    columns: same publish protocol (version-pointer flip on a versioned
-    table, staged write + rename swap with :func:`_sweep_orphans` crash
-    recovery on a plain directory), but files become rectangles in
-    (col1, col2) space instead of stripes in one dimension."""
-    from pyspark.sql import functions as F
-
-    df = _read_for_maintenance(spark, path)
-    zk = zorder_key(F.col(col1), F.col(col2), bits).alias("__zk")
-    out = (
-        df.withColumn("__zk", zk)
-        .repartitionByRange(target_files, "__zk")
-        .sortWithinPartitions("__zk")
-        .drop("__zk")
-    )
-    return _publish_compacted(out, path, "zorder")
-
-
 def read_table_evolved(spark: SparkSession, path: str) -> DataFrame:
     """Read a parquet table whose schema evolved across appends (new
     columns added by later ticks — the reference's upstream APIs add
@@ -639,9 +391,9 @@ def create_table_ddl(spark: SparkSession, name: str, schema, location: str) -> N
     """S7: declarative table creation mirroring
     bigquery_table_creation_queries.sql. NOT NULL is advisory in Spark's
     parquet catalog; enforcement lives at the write instead —
-    :func:`append_table`'s ``not_null`` reject/quarantine modes, which
-    the streaming ingestion path passes for every schema-declared
-    non-nullable column."""
+    :func:`append_table`'s ``not_null`` quarantine, which the streaming
+    ingestion path passes for every schema-declared non-nullable
+    column."""
     cols = ", ".join(f"`{f.name}` {f.dataType.simpleString()}" for f in schema.fields)
     spark.sql(
         f"CREATE TABLE IF NOT EXISTS {name} ({cols}) USING parquet LOCATION '{location}'"

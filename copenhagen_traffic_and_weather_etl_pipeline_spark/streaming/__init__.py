@@ -182,14 +182,12 @@ def ingest_and_refresh(
             traffic_path,
             partition_by=["date"],
             not_null=_not_null_cols(TRAFFIC_SCHEMA),
-            on_violation="quarantine",
         )
         append_table(
             weather,
             weather_path,
             partition_by=["date"],
             not_null=_not_null_cols(WEATHER_SCHEMA),
-            on_violation="quarantine",
         )
         # Refresh strictly after the appends: no partial-snapshot race.
         # Explicit schemas: a tick whose flattened side is EMPTY (one
@@ -230,7 +228,7 @@ def latest_joined_snapshot(spark: SparkSession, base_dir: str) -> DataFrame:
 
     The version pointer is resolved ONCE here — the returned DataFrame
     reads one immutable ``v_<n>`` dir, so refresh ticks committing and
-    compaction sweeping underneath it are invisible until the caller
+    retention sweeping underneath it are invisible until the caller
     re-resolves: a dashboard holds one consistent snapshot for as long
     as its scan runs, provided the producer's ``versioned_keep`` covers
     the scan length in ticks (pinned-across-two-ticks is proved

@@ -2,30 +2,20 @@
 idiomatic upgrade; the batch sibling is workload.scale_queries.
 sessionize_events).
 
-Two tiers, per the engine's design stance (built-ins first):
-
-1. ``session_window_stats`` — Spark's native ``session_window`` gap
-   sessionization. State lives in the state store, bounded by the
-   watermark; no Python in the loop. The registry entry
-   ``sessionize_stream_replay`` drains it over two replayed ticks and
-   checks the sessions against DuckDB's batch gaps-and-islands.
-2. ``stateful_user_totals`` — ``applyInPandasWithState``: the escape
-   hatch for custom per-key state machines Spark lacks a built-in for.
-   Here it keeps running per-user totals across micro-batches — the
-   shape (Arrow-batched, grouped state, update-mode emission) is what a
-   custom streaming operator at 100 TB looks like: state per key is
-   O(1), batches stream through the Python worker without collecting.
+``session_window_stats`` is Spark's native ``session_window`` gap
+sessionization: state lives in the state store, bounded by the
+watermark, with no Python in the loop. The registry entry
+``sessionize_stream_replay`` drains it over two replayed ticks and
+checks the sessions against DuckDB's batch gaps-and-islands.
+``streaming_dedup`` is the watermark-bounded exact dedup in front of an
+at-least-once source.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 EVENT_STREAM_SCHEMA = T.StructType(
     [
@@ -85,39 +75,9 @@ def streaming_dedup(stream_df: DataFrame, watermark: str = "2 hours") -> DataFra
     )
 
 
-_TOTALS_STATE_SCHEMA = "n_events bigint, total_value double"
-_TOTALS_OUTPUT_SCHEMA = "user_id bigint, n_events bigint, total_value double"
-
-
-def stateful_user_totals(stream_df: DataFrame) -> DataFrame:
-    """Custom stateful operator: running per-user event count and value
-    total across micro-batches, emitted in update mode every batch."""
-
-    def update(
-        key: tuple, pdfs: Iterator[pd.DataFrame], state: GroupState
-    ) -> Iterator[pd.DataFrame]:
-        n, tot = state.get if state.exists else (0, 0.0)
-        for pdf in pdfs:
-            n += len(pdf)
-            tot += float(pdf["value"].fillna(0.0).sum())
-        state.update((n, tot))
-        yield pd.DataFrame(
-            {"user_id": [key[0]], "n_events": [n], "total_value": [round(tot, 6)]}
-        )
-
-    return stream_df.groupBy("user_id").applyInPandasWithState(
-        update,
-        _TOTALS_OUTPUT_SCHEMA,
-        _TOTALS_STATE_SCHEMA,
-        "update",
-        GroupStateTimeout.NoTimeout,
-    )
-
-
 __all__ = [
     "EVENT_STREAM_SCHEMA",
     "read_event_stream",
     "session_window_stats",
-    "stateful_user_totals",
     "streaming_dedup",
 ]

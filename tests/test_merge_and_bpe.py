@@ -67,3 +67,13 @@ def test_encode_with_merges_applies_in_order_within_words(spark):
     # "ll" merges first, then "he"; merges never cross the word gap
     # (the trailing "o"+leading "h" of "hello hell" stay separate).
     assert out.bpe_tokens == "he ll o he ll o h l"
+
+
+def test_encode_lowercases_like_the_learned_vocabulary(spark):
+    # word_frequencies learns over lowercased words, so every casing of
+    # a word must encode with the same merges.
+    docs = spark.createDataFrame([Row(doc_id=1, text="Hello hello HELLO")])
+    merges = learn_bpe(word_frequencies(docs), 2)
+    assert [(l, r) for l, r, _ in merges] == [("e", "l"), ("el", "l")]
+    out = encode_with_merges(docs, merges).collect()[0]
+    assert out.bpe_tokens == "h ell o h ell o h ell o"

@@ -13,7 +13,6 @@ from copenhagen_traffic_and_weather_etl_pipeline_spark.functions import (
 from copenhagen_traffic_and_weather_etl_pipeline_spark.schemas import TRAFFIC_SCHEMA
 from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
     append_table,
-    compact_table,
     create_table_ddl,
 )
 
@@ -45,44 +44,6 @@ def test_decode_pubsub_payload(spark):
     assert got["decoded"] == msg
 
 
-def test_compact_table_reduces_files_and_enables_skipping(spark, tmp_path):
-    import pyarrow.parquet as pq
-    from pathlib import Path
-
-    path = str(tmp_path / "events_tbl")
-    src = spark.range(0, 10000).select(
-        F.col("id").alias("k"), (F.col("id") % 97).cast("double").alias("v")
-    )
-    # Two fragmented appends -> many sub-block files.
-    src.repartition(16).write.mode("append").parquet(path)
-    src.repartition(16).write.mode("append").parquet(path)
-    n_before = sum(1 for p in Path(path).iterdir() if p.name.endswith(".parquet"))
-    assert n_before >= 32
-
-    n_after = compact_table(spark, path, target_files=4, sort_col="k")
-    assert n_after <= 4
-
-    # Content survives the rewrite exactly.
-    out = spark.read.parquet(path)
-    assert out.count() == 20000
-    assert out.agg(F.sum("k")).collect()[0][0] == 2 * sum(range(10000))
-
-    # Range-sorted files have disjoint k-ranges -> a point/range filter
-    # can skip every other file on parquet min/max stats alone.
-    ranges = []
-    for p in sorted(Path(path).iterdir()):
-        if not p.name.endswith(".parquet"):
-            continue
-        md = pq.ParquetFile(str(p)).metadata
-        stats = [
-            md.row_group(i).column(0).statistics for i in range(md.num_row_groups)
-        ]
-        ranges.append((min(s.min for s in stats), max(s.max for s in stats)))
-    ranges.sort()
-    for (lo1, hi1), (lo2, hi2) in zip(ranges, ranges[1:]):
-        assert hi1 <= lo2, f"overlapping file ranges: ({lo1},{hi1}) vs ({lo2},{hi2})"
-
-
 def test_observe_metrics_ride_the_job(spark, tmp_path):
     # O5 Catalyst-native: counts accumulate during the write itself —
     # no second scan. Metrics must match the data written.
@@ -102,66 +63,6 @@ def test_observe_metrics_ride_the_job(spark, tmp_path):
     wrapped.write.mode("overwrite").parquet(str(tmp_path / "out"))
     got = obs.get
     assert got == {"n_rows": 100, "n_errors": 10, "max_id": 99}
-
-
-def test_zorder_compaction_shrinks_both_columns_spans(spark, tmp_path):
-    # One-column range sort leaves the OTHER column's file min/max
-    # spanning the whole domain (zero skipping). Z-order clustering must
-    # shrink per-file spans on BOTH columns.
-    import pyarrow.parquet as pq
-    from pathlib import Path
-
-    from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
-        compact_table_zorder,
-    )
-
-    n, domain, files = 40_000, 1 << 16, 16
-
-    def file_spans(path: str) -> list[dict]:
-        spans = []
-        for p in sorted(Path(path).iterdir()):
-            if not p.name.endswith(".parquet"):
-                continue
-            md = pq.ParquetFile(str(p)).metadata
-            idx = {md.schema.column(i).name: i for i in range(md.num_columns)}
-            span = {}
-            for c in ("x", "y"):
-                st = [
-                    md.row_group(g).column(idx[c]).statistics
-                    for g in range(md.num_row_groups)
-                ]
-                span[c] = max(s.max for s in st) - min(s.min for s in st)
-            spans.append(span)
-        return spans
-
-    # Deterministic pseudo-uniform independent x, y in [0, 2^16).
-    src = spark.range(n).select(
-        F.pmod(F.xxhash64(F.col("id")), F.lit(domain)).cast("long").alias("x"),
-        F.pmod(F.xxhash64(F.col("id"), F.lit(1)), F.lit(domain)).cast("long").alias("y"),
-    )
-
-    single = str(tmp_path / "single")
-    src.write.parquet(single)
-    compact_table(spark, single, target_files=files, sort_col="x")
-    s1 = file_spans(single)
-    # x-sorted: y spans stay ~full-domain in every file.
-    assert all(sp["y"] > 0.8 * domain for sp in s1)
-
-    zpath = str(tmp_path / "zordered")
-    src.write.parquet(zpath)
-    n_after = compact_table_zorder(spark, zpath, files, "x", "y")
-    assert n_after <= files
-    out = spark.read.parquet(zpath)
-    assert out.count() == n
-
-    s2 = file_spans(zpath)
-    avg_y = sum(sp["y"] for sp in s2) / len(s2)
-    avg_x = sum(sp["x"] for sp in s2) / len(s2)
-    # Z-order: both dimensions' average spans shrink well below the
-    # domain (16 files ~ 4x4 grid -> ~domain/4 per dimension, plus
-    # boundary slack).
-    assert avg_y < 0.5 * domain, f"y span not clustered: {avg_y}"
-    assert avg_x < 0.5 * domain, f"x span not clustered: {avg_x}"
 
 
 def test_schema_evolution_across_appends(spark, tmp_path):
@@ -193,42 +94,9 @@ def test_schema_evolution_across_appends(spark, tmp_path):
     assert pinned.count() == 4
 
 
-def test_sinks_roundtrip_orc_and_parquet(spark, tmp_path):
-    # The sinks take any Spark-built-in format; ORC must round-trip with
-    # identical content and honor partition pruning like parquet does.
-    from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
-        overwrite_table_versioned,
-        read_table_versioned,
-    )
-
-    df = spark.range(100).select(
-        F.col("id"),
-        (F.col("id") % 3).cast("string").alias("part"),
-        (F.col("id") * 2.5).alias("val"),
-    )
-    for fmt in ("parquet", "orc"):
-        p = str(tmp_path / f"t_{fmt}")
-        append_table(df, p, partition_by=["part"], format=fmt)
-        back = spark.read.format(fmt).load(p)
-        assert back.count() == 100
-        assert sorted(back.columns) == ["id", "part", "val"]
-        # Partition pruning: one partition dir read for part=1.
-        one = back.filter(F.col("part") == "1")
-        assert one.count() == 33
-        plan = one._jdf.queryExecution().executedPlan().toString()
-        assert "PartitionFilters" in plan or "part#" in plan
-        s = str(tmp_path / f"s_{fmt}")
-        overwrite_table_versioned(df.limit(10), s, format=fmt)
-        assert read_table_versioned(spark, s, format=fmt).count() == 10
-
-
-def test_materialize_once_local_and_reliable_paths(spark, tmp_path):
-    """materialize_once defaults to executor-local blocks; the
-    durability switch (spark.cph_etl.reliableCheckpoint + checkpointDir)
-    swaps in a reliable df.checkpoint() writing to the configured dir.
-    Both paths must preserve the frame's contents."""
-    import os
-
+def test_materialize_once_is_a_lazy_local_checkpoint(spark):
+    """materialize_once is a lazy localCheckpoint: same rows, lineage
+    truncated."""
     from copenhagen_traffic_and_weather_etl_pipeline_spark.plans import (
         materialize_once,
     )
@@ -238,27 +106,8 @@ def test_materialize_once_local_and_reliable_paths(spark, tmp_path):
     )
     expected = sorted(r["id"] for r in df.collect())
 
-    # Default: lazy localCheckpoint — same rows, lineage truncated.
     local = materialize_once(df)
     assert sorted(r["id"] for r in local.collect()) == expected
-
-    # Reliable: conf-driven checkpoint into the configured directory.
-    ckpt_dir = str(tmp_path / "reliable_ckpt")
-    spark.conf.set("spark.cph_etl.reliableCheckpoint", "true")
-    spark.conf.set("spark.cph_etl.checkpointDir", ckpt_dir)
-    try:
-        reliable = materialize_once(df)
-        assert sorted(r["id"] for r in reliable.collect()) == expected
-        # The reliable path must actually have written checkpoint data.
-        written = [
-            os.path.join(root, f)
-            for root, _dirs, files in os.walk(ckpt_dir)
-            for f in files
-        ]
-        assert written, "reliable checkpoint wrote nothing to the dir"
-    finally:
-        spark.conf.unset("spark.cph_etl.reliableCheckpoint")
-        spark.conf.unset("spark.cph_etl.checkpointDir")
 
 
 def test_fan_out_small_scan_guard(spark):
@@ -279,38 +128,6 @@ def test_fan_out_small_scan_guard(spark):
     assert fan_out_small_scan(wide) is wide
 
 
-def test_append_not_null_reject_fails_before_any_file_lands(spark, tmp_path):
-    """NOT NULL write-guard, reject mode: the reference's BigQuery DDL
-    (bigquery_table_creation_queries.sql:2-19) makes every ingested
-    column NOT NULL and a violating load job fails atomically. The
-    Spark-side guard must raise and leave the target path EMPTY."""
-    from pathlib import Path
-
-    from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
-        NotNullViolation,
-    )
-
-    path = str(tmp_path / "guarded")
-    good = spark.createDataFrame(
-        [("2026-08-14", 1.0), ("2026-08-14", 2.0)], "date string, v double"
-    )
-    n = append_table(good, path, not_null=["date", "v"])
-    assert n == 0
-    assert spark.read.parquet(path).count() == 2
-
-    bad = spark.createDataFrame(
-        [("2026-08-15", 3.0), (None, 4.0)], "date string, v double"
-    )
-    import pytest
-
-    with pytest.raises(NotNullViolation, match="NOT NULL"):
-        append_table(bad, path, not_null=["date", "v"])
-    # All-or-nothing: the good row in the violating batch did NOT land.
-    assert spark.read.parquet(path).count() == 2
-    # And nothing was quarantined in reject mode.
-    assert not Path(path + "_quarantine").exists()
-
-
 def test_append_not_null_quarantine_splits_the_batch(spark, tmp_path):
     """Quarantine mode: clean rows append, violating rows land in the
     dead-letter path, counts are exact per-batch."""
@@ -319,13 +136,13 @@ def test_append_not_null_quarantine_splits_the_batch(spark, tmp_path):
         [("2026-08-14", 1.0), (None, 2.0), ("2026-08-14", None)],
         "date string, v double",
     )
-    n = append_table(batch, path, not_null=["date", "v"], on_violation="quarantine")
+    n = append_table(batch, path, not_null=["date", "v"])
     assert n == 2
     assert spark.read.parquet(path).count() == 1
     q = spark.read.parquet(path + "_quarantine")
     assert q.count() == 2
     # Second batch appends to both sides without clobbering the first.
-    n2 = append_table(batch, path, not_null=["date", "v"], on_violation="quarantine")
+    n2 = append_table(batch, path, not_null=["date", "v"])
     assert n2 == 2
     assert spark.read.parquet(path).count() == 2
     assert spark.read.parquet(path + "_quarantine").count() == 4
@@ -356,7 +173,7 @@ def test_quarantine_write_lands_before_clean_append(spark, tmp_path, monkeypatch
 
     monkeypatch.setattr(DataFrameWriter, "save", failing_save)
     with pytest.raises(RuntimeError, match="simulated fact-append failure"):
-        append_table(batch, path, not_null=["date", "v"], on_violation="quarantine")
+        append_table(batch, path, not_null=["date", "v"])
     monkeypatch.undo()
 
     # Dead-letters committed, facts did not — the retry-safe state.
@@ -369,42 +186,10 @@ def test_quarantine_write_lands_before_clean_append(spark, tmp_path, monkeypatch
     # The retry itself: facts land exactly once; dead-letters duplicate
     # (benign — the quarantine table is a triage surface, not a fact
     # table downstream aggregates read).
-    n = append_table(batch, path, not_null=["date", "v"], on_violation="quarantine")
+    n = append_table(batch, path, not_null=["date", "v"])
     assert n == 1
     assert spark.read.parquet(path).count() == 1
     assert spark.read.parquet(path + "_quarantine").count() == 2
-
-
-def test_append_table_bigquery_passthrough_contract(spark):
-    """S5 BigQuery parity (round-10 verdict 'What's missing' #2): the
-    reference loads via ``pandas_gbq.to_gbq``
-    (deployment_function.py:182-196). ``append_table`` passes
-    ``format='bigquery'`` straight through to the open-source Spark
-    BigQuery connector with ``path`` as the ``dataset.table`` save
-    target, and the NOT NULL guard runs ENGINE-SIDE first — a
-    violating batch raises :class:`NotNullViolation` before anything
-    reaches the connector, jar or no jar. The connector jar is not in
-    this container, so the clean-batch path is asserted up to the
-    connector boundary: Spark's DATA_SOURCE_NOT_FOUND for 'bigquery'
-    proves the write dispatched to the right connector name."""
-    import pytest
-
-    from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
-        NotNullViolation,
-    )
-
-    bad = spark.createDataFrame(
-        [("2026-08-14", 1.0), (None, 2.0)], "date string, v double"
-    )
-    # Guard semantics are format-independent: reject raises engine-side.
-    with pytest.raises(NotNullViolation, match="NOT NULL"):
-        append_table(bad, "dataset.facts", format="bigquery", not_null=["date", "v"])
-
-    # A clean batch reaches the connector lookup itself.
-    good = spark.createDataFrame([("2026-08-14", 1.0)], "date string, v double")
-    with pytest.raises(Exception) as ei:
-        append_table(good, "dataset.facts", format="bigquery", not_null=["date", "v"])
-    assert "bigquery" in str(ei.value).lower()
 
 
 def test_versioned_overwrite_is_reader_safe_and_crash_atomic(
@@ -467,110 +252,9 @@ def test_versioned_overwrite_is_reader_safe_and_crash_atomic(
     assert not [n for n in names if n.startswith("_CURRENT.tmp")]
 
 
-def test_compaction_sweep_recovers_crashed_swap(spark, tmp_path):
-    """Crash recovery for the compaction rename swap: a crash between
-    the two renames leaves the table parked at an ``_old_*`` sibling
-    and the staged output at a ``_compact_*`` sibling. The next
-    compaction call must restore the table automatically, clear the
-    leaked staging dirs, and complete — no manual recovery, no data
-    loss."""
-    import shutil
-    from pathlib import Path
-
-    from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
-        _staging_sibling,
-        compact_table,
-    )
-
-    path = str(tmp_path / "facts")
-    df = spark.range(1000).selectExpr("id", "id % 7 AS k")
-    df.repartition(8).write.parquet(path)
-    expected = sorted(r["id"] for r in spark.read.parquet(path).collect())
-
-    # Simulate the crash point: path renamed aside, staged dir leaked,
-    # nothing at path.
-    old = _staging_sibling(path, "old")
-    shutil.move(path, old)
-    staged = _staging_sibling(path, "compact")
-    Path(staged).mkdir()
-    (Path(staged) / "part-junk.parquet").write_bytes(b"not a real file")
-
-    n = compact_table(spark, path, target_files=2, sort_col="id")
-    assert n == 2
-    got = sorted(r["id"] for r in spark.read.parquet(path).collect())
-    assert got == expected
-    # No leaked siblings remain.
-    assert list(Path(path).parent.glob("facts_*")) == []
-
-
-def test_compaction_on_versioned_table_publishes_via_pointer(spark, tmp_path):
-    """Compacting a version-pointer table must route through the atomic
-    pointer flip — no rename swap, so no table-absent window and no
-    ``_old_*``/``_compact_*`` siblings ever exist — while a reader
-    pinned before the compaction keeps its immutable version."""
-    from pathlib import Path
-
-    from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
-        compact_table,
-        compact_table_zorder,
-        overwrite_table_versioned,
-        read_table_versioned,
-    )
-
-    path = str(tmp_path / "vfacts")
-    df = spark.range(1000).selectExpr("id", "id % 7 AS a", "id % 11 AS b")
-    overwrite_table_versioned(df.repartition(8), path)
-    expected = sorted(r["id"] for r in read_table_versioned(spark, path).collect())
-
-    pinned = read_table_versioned(spark, path)  # resolves v_0, lazy scan
-    n = compact_table(spark, path, target_files=2, sort_col="id")
-    assert n == 2
-
-    # Same rows through the pointer; the published version is the
-    # compacted one (2 files); the pre-compaction reader still sees its
-    # pinned version — maintenance is invisible to in-flight scans.
-    assert sorted(r["id"] for r in read_table_versioned(spark, path).collect()) == (
-        expected
-    )
-    current = (Path(path) / "_CURRENT").read_text().splitlines()[0].strip()
-    files = [p for p in (Path(path) / current).iterdir() if p.suffix == ".parquet"]
-    assert len(files) == 2
-    assert pinned.count() == 1000
-
-    # The swap machinery never ran: no staging/old siblings, and the
-    # layout stays pointer + at most two version dirs.
-    assert list(Path(path).parent.glob("vfacts_*")) == []
-    dirs = sorted(p.name for p in Path(path).iterdir() if p.is_dir())
-    assert dirs == ["v_0", "v_1"]
-
-    # Z-order variant publishes the same way (v_1 -> v_2, v_0 swept).
-    n = compact_table_zorder(spark, path, target_files=4, col1="a", col2="b")
-    assert n == 4
-    assert sorted(r["id"] for r in read_table_versioned(spark, path).collect()) == (
-        expected
-    )
-    dirs = sorted(p.name for p in Path(path).iterdir() if p.is_dir())
-    assert dirs == ["v_1", "v_2"]
-    assert list(Path(path).parent.glob("vfacts_*")) == []
-
-    # A maintenance job must not shorten an owner-established retention
-    # window: warm a keep=2 table to full history depth, compact, and
-    # the two retained predecessors must survive.
-    deep = str(tmp_path / "vdeep")
-    for _ in range(3):
-        overwrite_table_versioned(df, deep, keep=2)
-    compact_table(spark, deep, target_files=1, sort_col="id")
-    deep_dirs = sorted(p.name for p in Path(deep).iterdir() if p.is_dir())
-    assert deep_dirs == ["v_1", "v_2", "v_3"]
-    history = (Path(deep) / "_CURRENT").read_text().splitlines()
-    assert history == ["v_3", "v_2", "v_1"]
-
-
 def test_append_not_null_validates_arguments(spark, tmp_path):
     import pytest
 
     df = spark.createDataFrame([("a", 1.0)], "date string, v double")
     with pytest.raises(ValueError, match="absent from batch"):
         append_table(df, str(tmp_path / "x"), not_null=["nope"])
-    with pytest.raises(ValueError, match="reject|quarantine"):
-        append_table(df, str(tmp_path / "x"), not_null=["date"], on_violation="drop")

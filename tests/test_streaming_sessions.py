@@ -1,6 +1,5 @@
-"""Stateful streaming: native session_window sessionization and the
-applyInPandasWithState custom operator accumulate correctly across
-micro-batches."""
+"""Stateful streaming: native session_window sessionization, streaming
+dedup and the watermark behave correctly across micro-batches."""
 
 from __future__ import annotations
 
@@ -9,7 +8,6 @@ import json
 from copenhagen_traffic_and_weather_etl_pipeline_spark.streaming.sessions import (
     read_event_stream,
     session_window_stats,
-    stateful_user_totals,
     streaming_dedup,
 )
 
@@ -102,49 +100,6 @@ def test_streaming_dedup_drops_redelivered_events(spark, tmp_path):
 
     rows = spark.sql("SELECT event_id FROM dedup_out ORDER BY event_id").collect()
     assert [r.event_id for r in rows] == [1, 2, 3]
-
-
-def test_stateful_totals_accumulate_across_batches(spark, tmp_path):
-    input_dir = tmp_path / "events"
-    input_dir.mkdir()
-    ckpt = tmp_path / "ckpt"
-    _write_events(
-        input_dir,
-        "batch1.json",
-        [
-            (1, "2026-08-12T09:00:00.000Z", 1, "click", 1.0),
-            (2, "2026-08-12T09:01:00.000Z", 1, "view", 2.0),
-            (3, "2026-08-12T09:02:00.000Z", 2, "view", 5.0),
-        ],
-    )
-    _write_events(
-        input_dir,
-        "batch2.json",
-        [
-            (4, "2026-08-12T10:00:00.000Z", 1, "click", 4.0),
-        ],
-    )
-    # maxFilesPerTrigger=1 forces two micro-batches in one AvailableNow
-    # run — user 1's state must carry from batch 1 into batch 2.
-    stream = read_event_stream(spark, str(input_dir), max_files_per_trigger=1)
-    q = (
-        stateful_user_totals(stream)
-        .writeStream.format("memory")
-        .queryName("user_totals")
-        .outputMode("update")
-        .option("checkpointLocation", str(ckpt))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-
-    # The memory sink appends each batch's updates; the max per user is
-    # the final accumulated state.
-    rows = spark.sql(
-        "SELECT user_id, max(n_events) AS n, max(total_value) AS tot "
-        "FROM user_totals GROUP BY user_id ORDER BY user_id"
-    ).collect()
-    assert [(r.user_id, r.n, r.tot) for r in rows] == [(1, 3, 7.0), (2, 1, 5.0)]
 
 
 def test_watermark_drops_late_events_across_restart(spark, tmp_path):

@@ -159,7 +159,7 @@ def test_clean_quarantine_append_runs_two_jobs(spark, spark_jobs, tmp_path):
         [("2026-08-14", 1.0), ("2026-08-14", 2.0)], "date string, v double"
     ).coalesce(1)
     with spark_jobs() as ids:
-        n = append_table(batch, path, not_null=["date", "v"], on_violation="quarantine")
+        n = append_table(batch, path, not_null=["date", "v"])
     assert n == 0
     assert len(ids) == 2  # the NOT NULL probe and the append
     assert not Path(path + "_quarantine").exists()
@@ -174,7 +174,7 @@ def test_quarantine_count_is_exact_across_partitions(spark, tmp_path):
         "'2026-08-14' AS date",
         "IF(id >= 20 AND id % 5 = 0, NULL, CAST(id AS DOUBLE)) AS v",
     )
-    n = append_table(batch, path, not_null=["date", "v"], on_violation="quarantine")
+    n = append_table(batch, path, not_null=["date", "v"])
     assert n == 4
     assert spark.read.parquet(path + "_quarantine").count() == 4
     assert spark.read.parquet(path).count() == 36

@@ -1,6 +1,5 @@
 """Property-based test (hypothesis) of the version-pointer publish
-protocol (`sinks.overwrite_table_versioned` / `read_table_versioned` /
-the versioned branch of `compact_table`).
+protocol (`sinks.overwrite_table_versioned` / `read_table_versioned`).
 
 The protocol's safety claim is about CRASH POINTS, not about Spark:
 whatever interleaving of successful refreshes and crashes (during the
@@ -36,13 +35,7 @@ class _FakeWriter:
         self.payload = payload
         self.crash_mid_write = crash_mid_write
 
-    def mode(self, _m):
-        return self
-
-    def format(self, _f):
-        return self
-
-    def save(self, path: str):
+    def save(self, path: str, format=None, mode=None, partitionBy=None):
         p = Path(path)
         p.mkdir(parents=True, exist_ok=True)
         (p / "part-00000.parquet").write_text(self.payload)
@@ -233,88 +226,3 @@ def test_crash_window_between_data_fsync_and_pointer_publish(tmp_path, monkeypat
     assert "v_1" not in dirs
     history = (root / sinks._CURRENT_POINTER).read_text().splitlines()
     assert history[0] == "v_2" and "v_1" not in history
-
-
-# ---------------------------------------------------------------------------
-# Plain-directory compaction swap: the docstring claims NO DATA LOSS at
-# any crash point (the table is either the old or the new content after
-# the next _sweep_orphans recovery — possibly parked, never gone).
-# Fuzz sequences of compaction attempts, each crashing at a chosen step
-# of the staged-write -> rename-old-aside -> rename-new-in -> delete-old
-# protocol, and assert the claim after every attempt.
-# ---------------------------------------------------------------------------
-
-_CRASH_POINTS = [
-    "none",  # attempt completes
-    "mid_staged_write",  # staging dir exists but is partial
-    "before_rename_old",  # staged complete, swap never started
-    "between_renames",  # old parked aside, nothing at path
-    "during_delete_old",  # new table in place, old dir lingering
-]
-
-
-@settings(max_examples=200, deadline=None)
-@given(st.lists(st.sampled_from(_CRASH_POINTS), min_size=1, max_size=6))
-def test_rename_swap_never_loses_the_table(tmp_path_factory, crashes):
-    import shutil
-
-    path = str(tmp_path_factory.mktemp("sw") / "table")
-
-    def write_table(dst: str, payload: str, partial: bool = False):
-        Path(dst).mkdir(parents=True, exist_ok=True)
-        (Path(dst) / "part-00000.parquet").write_text(payload)
-        if not partial:
-            (Path(dst) / "_COMPLETE").write_text(payload)
-
-    def read_table() -> str:
-        marker = Path(path) / "_COMPLETE"
-        assert marker.exists(), "table missing or partial after recovery"
-        return marker.read_text()
-
-    write_table(path, "gen-0")
-    committed = "gen-0"
-
-    real_move, real_rmtree = shutil.move, shutil.rmtree
-    for i, crash in enumerate(crashes, start=1):
-        payload = f"gen-{i}"
-        # compact_table's plain branch, faithfully: recover, stage, swap.
-        sinks._sweep_orphans(path)
-        assert read_table() == committed  # recovery restored the table
-
-        staged = sinks._staging_sibling(path, "compact")
-        if crash == "mid_staged_write":
-            write_table(staged, payload, partial=True)
-            continue  # the write "raised"; swap never runs
-        write_table(staged, payload)
-        if crash == "before_rename_old":
-            continue
-
-        calls = {"n": 0}
-
-        def move(src, dst, _crash=crash, _calls=calls):
-            _calls["n"] += 1
-            if _crash == "between_renames" and _calls["n"] == 2:
-                raise RuntimeError("crash between renames")
-            return real_move(src, dst)
-
-        def rmtree(p, _crash=crash):
-            if _crash == "during_delete_old":
-                raise RuntimeError("crash during delete-old")
-            return real_rmtree(p)
-
-        shutil.move, shutil.rmtree = move, rmtree
-        try:
-            sinks._swap_in(path, staged)
-            committed = payload
-        except RuntimeError:
-            if crash == "during_delete_old":
-                committed = payload  # new table already renamed in
-        finally:
-            shutil.move, shutil.rmtree = real_move, real_rmtree
-
-    # Final recovery pass: whatever the last crash left behind, the
-    # table is intact with the committed content and no debris remains.
-    sinks._sweep_orphans(path)
-    assert read_table() == committed
-    p = Path(path)
-    assert [s.name for s in p.parent.glob(p.name + "_*")] == []
