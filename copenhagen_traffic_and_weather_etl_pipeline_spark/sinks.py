@@ -269,21 +269,12 @@ def overwrite_table_versioned(
     return str(nxt)
 
 
-def read_table_versioned(spark: SparkSession, path: str) -> DataFrame:
-    """Resolve a version-pointer table (see
-    :func:`overwrite_table_versioned`) and read its live version (the
-    pointer's first line; the rest is retained history). The pointer
-    resolution pins THIS query to one immutable version dir — a
-    refresh committing mid-scan is invisible (snapshot isolation for
-    a single reader), because published version dirs are never
-    mutated, only superseded and eventually swept (after ``keep``
-    further refreshes)."""
-    return spark.read.parquet(live_version(path))
-
-
 def live_version(path: str) -> str:
-    """The live ``v_<n>`` dir of a version-pointer table, resolved once
-    from ``_CURRENT`` (FileNotFoundError if nothing was published)."""
+    """The live ``v_<n>`` dir of a version-pointer table (see
+    :func:`overwrite_table_versioned`), resolved once from ``_CURRENT``
+    (FileNotFoundError if nothing was published). A scan of the returned
+    dir is pinned to one immutable version: a refresh committing mid-scan
+    is invisible, and the dir survives ``keep`` further refreshes."""
     from pathlib import Path
 
     pointer = Path(path) / _CURRENT_POINTER

@@ -44,8 +44,11 @@ WEATHER_URL = (
 
 def geo_dimension(spark: SparkSession) -> DataFrame:
     """The 20 hard-coded geo-points (deployment_function.py:225-286) as a
-    dimension DataFrame — broadcast-sized by construction."""
-    return spark.createDataFrame(GEO_POINTS, GEO_SCHEMA)
+    dimension DataFrame — broadcast-sized by construction. Built from
+    pandas through Arrow, so it plans as a ``LocalTableScan``, not as a
+    Python-list RDD."""
+    points = pd.DataFrame(GEO_POINTS, columns=GEO_SCHEMA.names)
+    return spark.createDataFrame(points, GEO_SCHEMA)
 
 
 def endpoints(spark: SparkSession, data_types: tuple[str, ...] = ("weather", "traffic")) -> DataFrame:
@@ -54,7 +57,7 @@ def endpoints(spark: SparkSession, data_types: tuple[str, ...] = ("weather", "tr
     geo = geo_dimension(spark)
     from pyspark.sql import functions as F
 
-    dt = spark.createDataFrame([(d,) for d in data_types], "data_type string")
+    dt = spark.createDataFrame(pd.DataFrame({"data_type": list(data_types)}), "data_type string")
     return geo.crossJoin(F.broadcast(dt))
 
 

@@ -26,8 +26,8 @@ from copenhagen_traffic_and_weather_etl_pipeline_spark.schemas import (
 )
 from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
     append_table,
+    live_version,
     overwrite_table_versioned,
-    read_table_versioned,
 )
 from copenhagen_traffic_and_weather_etl_pipeline_spark.sources import fixtures
 from copenhagen_traffic_and_weather_etl_pipeline_spark.sources.rest import (
@@ -86,7 +86,7 @@ def test_end_to_end_two_ticks(spark, tmp_path):
     spath = str(tmp_path / "latest_joined_data")
     overwrite_table_versioned(snap, spath)
     overwrite_table_versioned(snap, spath)
-    assert read_table_versioned(spark, spath).count() == 20
+    assert spark.read.parquet(live_version(spath)).count() == 20
 
     # Kelvin->Celsius landed: fixture 290.15K == 17.0C
     temp = wdf.select("temperature").first()["temperature"]

@@ -34,6 +34,17 @@ def test_flagship_broadcasts_the_dimension_join(spark):
     assert "SortMergeJoin" not in plan
 
 
+def test_endpoints_frame_is_a_local_scan(spark):
+    # The 20-point x 2-API fan-out is a literal table: built from
+    # pandas it plans as a LocalTableScan. A Python-list RDD
+    # ("Scan ExistingRDD") costs a Python round trip on every scan.
+    from copenhagen_traffic_and_weather_etl_pipeline_spark.sources import rest
+
+    plan = explain_df(spark, rest.endpoints(spark))
+    assert "ExistingRDD" not in plan, plan
+    assert "LocalTableScan" in plan
+
+
 def test_topk_compiles_to_take_ordered(spark):
     plan = plan_of(spark, "sim_topk_bruteforce")
     assert "TakeOrderedAndProject" in plan

@@ -204,20 +204,20 @@ def test_versioned_overwrite_is_reader_safe_and_crash_atomic(
     from pyspark.sql.readwriter import DataFrameWriter
 
     from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
+        live_version,
         overwrite_table_versioned,
-        read_table_versioned,
     )
 
     path = str(tmp_path / "snap")
     v0 = spark.range(10).selectExpr("id", "id * 2 AS v")
     overwrite_table_versioned(v0, path)
-    assert read_table_versioned(spark, path).count() == 10
+    assert spark.read.parquet(live_version(path)).count() == 10
 
     # Refresh: readers that resolved BEFORE the flip keep a live version.
-    pinned = read_table_versioned(spark, path)  # resolves v_0, lazy scan
+    pinned = spark.read.parquet(live_version(path))  # resolves v_0, lazy scan
     v1 = spark.range(25).selectExpr("id", "id * 3 AS v")
     overwrite_table_versioned(v1, path)
-    assert read_table_versioned(spark, path).count() == 25
+    assert spark.read.parquet(live_version(path)).count() == 25
     assert pinned.count() == 10  # snapshot isolation: v_0 still on disk
 
     # Crash BEFORE publish: the version write fails — the pointer (and
@@ -231,7 +231,7 @@ def test_versioned_overwrite_is_reader_safe_and_crash_atomic(
     with pytest.raises(RuntimeError, match="simulated crash"):
         overwrite_table_versioned(spark.range(5), path)
     monkeypatch.setattr(DataFrameWriter, "save", real_save)
-    assert read_table_versioned(spark, path).count() == 25
+    assert spark.read.parquet(live_version(path)).count() == 25
 
     # Crash AFTER the version write but BEFORE publish: an orphaned
     # unpointed dir — readers still on the published version; the next
@@ -239,10 +239,10 @@ def test_versioned_overwrite_is_reader_safe_and_crash_atomic(
     orphan = Path(path) / "v_99"
     orphan.mkdir()
     (orphan / "part-junk.parquet").write_bytes(b"partial garbage")
-    assert read_table_versioned(spark, path).count() == 25
+    assert spark.read.parquet(live_version(path)).count() == 25
     v2 = spark.range(7).selectExpr("id", "id AS v")
     overwrite_table_versioned(v2, path)
-    assert read_table_versioned(spark, path).count() == 7
+    assert spark.read.parquet(live_version(path)).count() == 7
     assert not orphan.exists()
 
     # Retention: current + one predecessor, nothing else; no tmp files.

@@ -88,10 +88,6 @@ def test_streaming_versioned_snapshot_refresh(spark, tmp_path):
     newest, the previous version survives for in-flight scans, and a
     reader pinned before the second refresh still reads the first
     snapshot."""
-    from copenhagen_traffic_and_weather_etl_pipeline_spark.sinks import (
-        read_table_versioned,
-    )
-
     input_dir = tmp_path / "incoming"
     input_dir.mkdir()
     base = tmp_path / "tables"
@@ -106,12 +102,12 @@ def test_streaming_versioned_snapshot_refresh(spark, tmp_path):
     q.awaitTermination(120)
 
     snap_path = str(base / "latest_joined_data")
-    snap1 = read_table_versioned(spark, snap_path)
+    snap1 = latest_joined_snapshot(spark, str(base))
     assert snap1.count() == 20
     assert {r["time"] for r in snap1.select("time").distinct().collect()} == {"09:00"}
 
     # Pin a reader to the current version, then refresh underneath it.
-    pinned = read_table_versioned(spark, snap_path)
+    pinned = latest_joined_snapshot(spark, str(base))
     _write_tick(input_dir, "tick2.json", "2026-08-12T10:00:00.000Z")
     q2 = ingest_and_refresh(
         read_fetch_stream(spark, str(input_dir)),
@@ -120,7 +116,7 @@ def test_streaming_versioned_snapshot_refresh(spark, tmp_path):
     )
     q2.awaitTermination(120)
 
-    snap2 = read_table_versioned(spark, snap_path)
+    snap2 = latest_joined_snapshot(spark, str(base))
     assert snap2.count() == 20
     assert {r["time"] for r in snap2.select("time").distinct().collect()} == {"10:00"}
     # The pinned reader's version was not swept mid-scan.
@@ -144,7 +140,7 @@ def test_streaming_versioned_snapshot_refresh(spark, tmp_path):
     assert dirs == ["v_0", "v_1", "v_2"]
     history = (Path(snap_path) / "_CURRENT").read_text().splitlines()
     assert history == ["v_2", "v_1", "v_0"]
-    snap3 = read_table_versioned(spark, snap_path)
+    snap3 = latest_joined_snapshot(spark, str(base))
     assert {r["time"] for r in snap3.select("time").distinct().collect()} == {"11:00"}
 
 

@@ -1,5 +1,5 @@
 """Property-based test (hypothesis) of the version-pointer publish
-protocol (`sinks.overwrite_table_versioned` / `read_table_versioned`).
+protocol (`sinks.overwrite_table_versioned` / `sinks.live_version`).
 
 The protocol's safety claim is about CRASH POINTS, not about Spark:
 whatever interleaving of successful refreshes and crashes (during the
@@ -50,7 +50,7 @@ class _FakeDF:
 
 
 def _read_published(path: str) -> str:
-    """A reader: resolve the pointer exactly like read_table_versioned,
+    """A reader: resolve the pointer exactly like live_version,
     then require the resolved dir to be COMPLETE and return its payload."""
     pointer = Path(path) / sinks._CURRENT_POINTER
     version = pointer.read_text().splitlines()[0].strip()
